@@ -546,3 +546,76 @@ def test_gc_hole_cannot_resurrect_stale_commit(tmp_path):
     assert exc.value.code == "CONCURRENT_WRITE"
     final = t._load_meta()
     assert final["version"] == 7 and final["seq"] == 8
+
+
+def test_concurrent_index_refreshes_serialize(spark, tmp_path):
+    # Two index refreshes on one table, racing from two threads: both
+    # read the same manifest seq, so without the writer lock one of
+    # them loses its commit with CONCURRENT_WRITE. Under the lock they
+    # serialize and each indexes the whole tail.
+    from vectordb_spark.catalog import Warehouse
+
+    t = Warehouse(spark, str(tmp_path / "wh")).load_db("rdb").create_table(
+        {
+            "name": "R",
+            "fields": [
+                {"name": "ID", "dataType": "INT", "primaryKey": True},
+                {"name": "Body", "dataType": "STRING"},
+                {
+                    "name": "Sp",
+                    "dataType": "SPARSE_VECTOR_FLOAT",
+                    "dimensions": 64,
+                    "metricType": "EUCLIDEAN",
+                },
+                {
+                    "name": "Emb",
+                    "dataType": "VECTOR_FLOAT",
+                    "dimensions": 2,
+                    "metricType": "EUCLIDEAN",
+                },
+            ],
+        }
+    )
+
+    def rows(lo, hi):
+        return [
+            {
+                "ID": i,
+                "Body": f"t{i % 4} body",
+                "Sp": {"indices": [i % 64], "values": [1.0]},
+                "Emb": [float(i), 0.0],
+            }
+            for i in range(lo, hi)
+        ]
+
+    t.insert(rows(0, 40))
+    t.rebuild_text_index("Body", buckets=4)
+    t.rebuild_sparse_index("Sp", buckets=4)
+    tail = 12
+    t.insert(rows(40, 40 + tail))
+
+    start = threading.Barrier(2)
+    results: dict[str, int] = {}
+    errors: list[str] = []
+
+    def run(name, refresh):
+        start.wait(timeout=60)
+        try:
+            results[name] = refresh()["appendedRecords"]
+        except Exception as e:  # noqa: BLE001 — surfaced by the assert
+            errors.append(f"{name}: {e!r}")
+
+    threads = [
+        threading.Thread(target=run, args=("text", lambda: t.refresh_text_index("Body"))),
+        threading.Thread(target=run, args=("sparse", lambda: t.refresh_sparse_index("Sp"))),
+    ]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=600)
+        assert not th.is_alive()
+    assert errors == []
+    assert results == {"text": tail, "sparse": tail}
+    meta = t._load_meta()
+    assert meta["text_indexes"]["Body"]["deltas"] == ["textindex_Body_v1_delta1"]
+    assert meta["sparse_indexes"]["Sp"]["deltas"] == ["sparseindex_Sp_v1_delta1"]

@@ -635,3 +635,13 @@ def test_encode_arrow_map_passthrough_and_nulls(spark):
     # failure that merely mentions NULLs must not satisfy this test
     with pytest.raises(Exception, match="encode_arrow_map: NULL vectors"):
         PQ.encode_arrow_map(nulled, "embedding", cb).collect()
+
+    # compensating raggedness: rows of dim+1 and dim-1 in ONE batch keep
+    # the total element count at n*dim, so only a per-row length check
+    # catches the misalignment
+    ragged = spark.createDataFrame(
+        [(0, "a", [0.1] * (dim + 1)), (1, "b", [0.2] * (dim - 1))],
+        "vec_id long, label string, embedding array<float>",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="ragged or wrong-dimension"):
+        PQ.encode_arrow_map(ragged, "embedding", cb).collect()

@@ -293,6 +293,8 @@ def test_refresh_index_appends_delta(table):
     # delta-resident row is the unambiguous nearest neighbor
     tail_vec = lambda i: [5.0 + i * 0.1, 5.0 - i * 0.1, 4.0, 3.0]  # noqa: E731
     table.insert([{"ID": 900 + i, "Embedding": tail_vec(i)} for i in range(40)])
+    # an orphan of a refresh that died before its commit is replaced
+    _plant_orphan(table.path, "index_Embedding_v1_delta1")
     out = table.refresh_index("Embedding")
     assert out["version"] == 1 and out["appendedRecords"] == 40
     # no-op second refresh
@@ -307,6 +309,20 @@ def test_refresh_index_appends_delta(table):
     # partial probe still finds the query's own (delta-resident) row
     part = table.search_indexed_df(q, limit=3, nprobe=2).collect()
     assert part[0]["ID"] == 905
+    # vacuum keeps the live delta dir...
+    table.vacuum(grace_seconds=0)
+    left = {d for d in os.listdir(table.path) if d.startswith("index_")}
+    assert left == {"index_Embedding_v1", "index_Embedding_v1_delta1"}
+    # ...and a full rebuild supersedes both v1 dirs
+    table.rebuild("Embedding", k=8)
+    table.vacuum(grace_seconds=0)
+    left = {d for d in os.listdir(table.path) if d.startswith("index_")}
+    assert left == {"index_Embedding_v2"}
+    full = [
+        r["ID"]
+        for r in table.search_indexed_df(q, limit=5, nprobe=8).collect()
+    ]
+    assert full == exact
 
 
 def test_refresh_index_sq8_and_sizes(table):
@@ -398,3 +414,63 @@ def test_refresh_index_probes_untagged_manifest(table):
     table.insert([{"ID": 901, "Embedding": [9.2, 9.2, 9.2, 9.2]}])
     with pytest.raises(VectorDBError, match="convention"):
         table.refresh_index("Embedding")
+
+
+
+def _plant_orphan(table_path: str, name: str) -> None:
+    # what a refresh that died between its delta write and its
+    # manifest commit leaves behind
+    os.makedirs(os.path.join(table_path, name))
+    with open(os.path.join(table_path, name, "part-00000-torn.parquet"), "w") as fh:
+        fh.write("torn write")
+
+
+def test_refresh_replaces_orphaned_text_and_sparse_deltas(spark, tmp_path):
+    """Every family writes its delta dirs the same way: an orphaned
+    ``<dir>_delta1`` (and sparse norms sidecar) is replaced by the next
+    refresh, never an error (the vector case is in
+    test_refresh_index_appends_delta)."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    t = wh.load_db("orphdb").create_table(
+        {
+            "name": "ts",
+            "fields": [
+                {"name": "ID", "dataType": "INT", "primaryKey": True},
+                {"name": "Body", "dataType": "STRING"},
+                {
+                    "name": "Sp",
+                    "dataType": "SPARSE_VECTOR_FLOAT",
+                    "dimensions": 100,
+                    "metricType": "EUCLIDEAN",
+                },
+            ],
+        }
+    )
+
+    def rows(lo, hi):
+        return [
+            {
+                "ID": i,
+                "Body": f"w{i % 5} w{i % 3} common",
+                "Sp": {"indices": [i % 50, 50 + i % 7], "values": [1.0, 0.5]},
+            }
+            for i in range(lo, hi)
+        ]
+
+    t.insert(rows(0, 60))
+    t.rebuild_text_index("Body", buckets=4)
+    t.rebuild_sparse_index("Sp", buckets=4)
+    t.insert(rows(60, 70))
+    for d in (
+        "textindex_Body_v1_delta1",
+        "sparseindex_Sp_v1_delta1",
+        "sparseindex_Sp_v1_delta1_norms",
+    ):
+        _plant_orphan(t.path, d)
+    assert t.refresh_text_index("Body")["appendedRecords"] == 10
+    assert t.refresh_sparse_index("Sp")["appendedRecords"] == 10
+    assert t.search_text_df("common", limit=100).count() == 70
+    sq = {"indices": [15, 52], "values": [1.0, 1.0]}
+    assert [r["ID"] for r in t.search_sparse_indexed_df(sq, limit=5).collect()] == [
+        r["ID"] for r in t.search_df(sq, limit=5).collect()
+    ]

@@ -246,6 +246,7 @@ def encode_arrow_map(df, vec_col: str, codebook: list[list[list[int]]],
     first — the build-time call sites carry (id, vector) only."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql import types as T
 
     CB = np.asarray(codebook, dtype=np.int64)
@@ -271,21 +272,22 @@ def encode_arrow_map(df, vec_col: str, codebook: list[list[list[int]]],
             # flatten() honors slice offsets; vectors are fixed-dim so
             # the flat buffer reshapes to (n, dim) with zero per-row
             # Python objects. dim comes from the codebook, NOT from
-            # reshape(n, -1): ragged vector lengths whose total happens
-            # to divide n would silently misalign every following row
-            # (ADVICE r12) — the explicit width makes that fail loudly.
+            # reshape(n, -1), and every ROW's length is checked: a
+            # total-length check alone passes compensating raggedness
+            # (rows of dim+1 and dim-1) and misaligns every row after.
             dim = CB.shape[0] * CB.shape[2]
+            lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+            if (lens != dim).any():
+                raise ValueError(
+                    f"encode_arrow_map: expected {dim}-element vectors in "
+                    f"{vec_col!r}, got lengths {sorted(set(lens.tolist()))} "
+                    "— ragged or wrong-dimension vectors"
+                )
             flat = (
                 col.flatten()
                 .to_numpy(zero_copy_only=False)
                 .astype(np.float64, copy=False)
             )
-            if len(flat) != n * dim:
-                raise ValueError(
-                    f"encode_arrow_map: expected {n}x{dim} elements in "
-                    f"{vec_col!r}, got {len(flat)} — ragged or "
-                    "wrong-dimension vectors"
-                )
             X = flat.reshape(n, dim)
             codes = _encode_batch_np(X, CB, CBf, c2)
             offs = pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32))

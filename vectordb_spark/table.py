@@ -41,9 +41,10 @@ try:  # POSIX advisory file locks (Linux/macOS); absent on Windows
 except ImportError:  # pragma: no cover
     fcntl = None  # type: ignore[assignment]
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from vectordb_spark import delta_index as di
 from vectordb_spark.embedding import embed_column
 from vectordb_spark.expr.compile import (
     references_distance,
@@ -1281,27 +1282,12 @@ class Table:
         """Reconstruct the coarse quantizer from the manifest's
         persisted cluster layout (None if the table was never
         cluster-compacted)."""
-        from vectordb_spark.operators.ann import IVFIndex
-
         info = (meta or self._load_meta()).get("cluster_layout")
-        if not info:
-            return None
-        idx = IVFIndex(k=info["k"], seed=info["seed"], metric=info["metric"])
-        idx.centroids = info["centroids"]
-        idx.cluster_sizes = {
-            int(c): int(n) for c, n in (info.get("cluster_sizes") or {}).items()
-        }
-        idx.mean_intra_radius = info.get("mean_intra_radius")
-        nn = info.get("mean_nn_centroid_dist")
-        idx.mean_nn_centroid_dist = float("inf") if nn is None else float(nn)
-        return idx
+        return _ivf_index(info) if info else None
 
     def _assign_cluster(self, df: DataFrame) -> DataFrame:
-        """Nearest stored centroid as a codegen Column — k inline
-        distance expressions + array argmin, no shuffle, no UDF. Keeps
-        appended segments in the clustered layout."""
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
-
+        """Tag rows with their nearest stored centroid (``_cluster``),
+        keeping appended segments in the clustered layout."""
         info = self._load_meta().get("cluster_layout")
         if not info:
             raise VectorDBError(
@@ -1309,16 +1295,8 @@ class Table:
                 "Table is partitioned by _cluster but has no cluster "
                 "layout in the manifest.",
             )
-        field = info["field"]
-        dists = F.array(
-            *[
-                l2_squared(F.col(field), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
         return df.withColumn(
-            "_cluster",
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int"),
+            "_cluster", _nearest_centroid(info["field"], info["centroids"])
         )
 
     # Segment dirs younger than this survive vacuum even when
@@ -1348,24 +1326,17 @@ class Table:
         referenced = set(meta["files"])
         for h in kept:
             referenced.update(h["files"])
-        # live index dirs: current version + refresh deltas, for every
-        # indexed field (vector and text) — superseded versions from
-        # rebuilds are unreferenced and reclaimable like old segments
-        for fam in ("indexes", "text_indexes", "sparse_indexes"):
-            for info in meta.get(fam, {}).values():
-                referenced.add(info["dir"])
-                referenced.update(info.get("deltas", []))
-                referenced.update(info.get("norms_deltas", []))
-                if info.get("norms_dir"):
-                    referenced.add(info["norms_dir"])
+        # live index dirs: superseded versions from rebuilds are
+        # unreferenced and reclaimable like old segments
+        referenced.update(di.live_dirs(meta))
         removed = skipped_recent = 0
         now = time.time()
         for name in sorted(os.listdir(self.path)):
             full = os.path.join(self.path, name)
             if (
                 name.startswith(
-                    ("add_", "base_", "cow_", "zrw_", "index_",
-                     "textindex_", "sparseindex_", "cowstage_")
+                    ("add_", "base_", "cow_", "zrw_", "cowstage_")
+                    + di.DIR_PREFIXES
                 )
                 and name not in referenced
                 and os.path.isdir(full)
@@ -2089,7 +2060,6 @@ class Table:
 
     # ------------------------------------------------------------- indexes
 
-    @_writer_locked
     def rebuild(
         self,
         field: str,
@@ -2103,12 +2073,11 @@ class Table:
         train_keep: int | None = None,
     ) -> dict:
         """Batch ANN index (re)build — the reference's background
-        rebuild (X3, table_mvp.cpp:94-203) as an explicit job. Writes a
-        new index version: the vector column + _row_id reorganized into
-        a parquet dir PARTITIONED BY cluster (at scale, probing is
-        partition pruning on this table), plus centroids in the
-        manifest. Readers pick up the new version on next query — the
-        double-buffer swap without mutexes."""
+        rebuild (X3, table_mvp.cpp:94-203) as an explicit job, versioned
+        and swapped per the delta-segment protocol (delta_index.py).
+        The index dir holds the vector column (or its SQ8/PQ codes) +
+        _row_id PARTITIONED BY cluster, so probing is partition pruning;
+        centroids ride in the manifest."""
         f = self.schema.get(field)
         if f is None or not f.field_type.is_dense_vector:
             raise VectorDBError(
@@ -2139,123 +2108,95 @@ class Table:
                 "train_mod/train_keep apply to the lloyd trainer only "
                 "(the kmeans path already samples internally).",
             )
-        meta = self._load_meta()
-        df = self.df()
-        idx = IVFIndex(k=k, seed=seed, metric=f.metric or "EUCLIDEAN")
-        if train == "lloyd":
-            # deterministic seeded-Lloyd trainer: same Lloyd iterations
-            # as kmeans but bit-replayable (integer-grid means, fold
-            # distances) — the trained path a SQL oracle can audit,
-            # persisted in the manifest exactly like the MLlib path
-            assigned = idx.build_lloyd(
-                df.select("_row_id", field), field, rounds=rounds,
-                train_mod=train_mod, train_keep=train_keep,
-            )
-        else:
-            assigned = idx.build(df.select("_row_id", field), field)
-        if itype == "IVF_SQ8":
-            # store int8 codes + per-row scale + exact squared norm, NOT
-            # the float vectors: the probe-scan reads 1 byte/dim instead
-            # of 4 — the 4× bandwidth saving is physical, not notional.
-            # Exact distances come from re-joining the base table for
-            # the (small) re-rank candidate set only.
-            from vectordb_spark.functions.distance import dot_product
-            from vectordb_spark.operators.quant import (
-                quant_scale_exprs,
-                quantize_exprs,
-            )
 
-            scale_s, _ = quant_scale_exprs(field)
-            qz_s, _ = quantize_exprs(field, "_scale")
-            assigned = (
-                assigned.withColumn("_scale", F.expr(scale_s))
-                .withColumn("_q", F.expr(qz_s).cast("array<tinyint>"))
-                .withColumn(
-                    "_norm2", dot_product(F.col(field), F.col(field))
-                )
-                .select("_row_id", "_scale", "_q", "_norm2", "_cluster")
-            )
-        pq_codebook = None
-        if itype == "IVF_PQ":
-            # coarse quantizer (_cluster) for pruning + fine quantizer
-            # (PQ codes, 4 bytes/row at M=8×K=16) for ranking: the
-            # probe-scan reads M nibbles/row instead of 4·dim bytes;
-            # float vectors are touched only for the re-rank candidates.
-            # Codes are RESIDUAL-encoded (vec − assigned centroid):
-            # raw-vector codes collapse inside tight clusters — every
-            # member shares a code and ADC cannot rank within the blob
-            # (SCALING.md "residual encoding is load-bearing": 3,125-way
-            # ADC ties, recall 0; residual 0.91 at the same budget)
-            from vectordb_spark.operators.pq import ResidualPQIndex
-
-            # M must divide the dimension (each subspace = dim/M
-            # contiguous components); largest of 8/4/2/1 that does
-            m_sub = next(m for m in (8, 4, 2, 1) if (f.dimension or 0) % m == 0)
-            pqi = ResidualPQIndex(m=m_sub, seed=seed)
+        def write_dirs(meta: dict, name: str):
+            df = self.df()
+            idx = IVFIndex(k=k, seed=seed, metric=f.metric or "EUCLIDEAN")
             if train == "lloyd":
-                # the bit-replayable trainer for BOTH tiers: coarse
-                # cells came from build_lloyd above, the fine codebook
-                # now trains on the same seeded-Lloyd discipline — a
-                # SQL oracle can audit the full trained IVF_PQ
-                # lifecycle (queries/ann.py table_ivfpq_trained_search)
-                pqi.fit_residual_lloyd(
-                    idx, assigned, field, rounds=rounds, id_col="_row_id",
+                # deterministic seeded-Lloyd trainer: same Lloyd iterations
+                # as kmeans but bit-replayable (integer-grid means, fold
+                # distances) — the trained path a SQL oracle can audit,
+                # persisted in the manifest exactly like the MLlib path
+                assigned = idx.build_lloyd(
+                    df.select("_row_id", field), field, rounds=rounds,
                     train_mod=train_mod, train_keep=train_keep,
                 )
             else:
-                pqi.fit_residual(idx, assigned, field, id_col="_row_id")
-            pq_codebook = pqi.codebook
-            assigned = pqi.codes_residual(assigned, field).select(
-                "_row_id", "_pq_codes", "_cluster"
-            )
-        version = meta.get("indexes", {}).get(field, {}).get("version", 0) + 1
-        name = f"index_{field}_v{version}"
-        (
-            assigned.write.mode("overwrite")
-            .partitionBy("_cluster")
-            .parquet(os.path.join(self.path, name))
-        )
-        indexed_up_to = meta["next_row_id"]
-        meta.setdefault("indexes", {})[field] = {
-            "type": itype,
-            "k": k,
-            "seed": seed,
-            "train": train,
-            "rounds": rounds if train == "lloyd" else None,
-            # sampled-trainer hash filter (None = full-corpus training);
-            # recorded so a rebuilt-from-manifest audit can replay the
-            # exact training subset
-            "train_mod": train_mod if train == "lloyd" else None,
-            "train_keep": train_keep if train == "lloyd" else None,
-            "version": version,
-            "dir": name,
-            "deltas": [],
-            "metric": f.metric or "EUCLIDEAN",
-            "centroids": idx.centroids,
-            "cluster_sizes": {str(c): n for c, n in (idx.cluster_sizes or {}).items()},
-            "indexed_up_to": indexed_up_to,
-            "mutation_seq": int(meta.get("mutation_seq", 0)),
-            "pq_codebook": pq_codebook,
-            # residual-encoded codes (build ≥ r7); absent/False in
-            # older manifests → the raw-code search path still serves
-            "pq_residual": itype == "IVF_PQ",
-            # arithmetic convention the residual grid was encoded
-            # under — refresh_index refuses to mix conventions
-            "pq_residual_convention": (
-                _PQ_RESIDUAL_CONVENTION if itype == "IVF_PQ" else None
-            ),
-            # separation statistics → the exact-fallback planner rule
-            # applies to persisted-index searches too (None = +inf)
-            "mean_intra_radius": idx.mean_intra_radius,
-            "mean_nn_centroid_dist": (
-                None
-                if idx.mean_nn_centroid_dist is None
-                or math.isinf(idx.mean_nn_centroid_dist)
-                else idx.mean_nn_centroid_dist
-            ),
-        }
-        self._save_meta(meta)
-        return {"field": field, "version": version, "indexedRecords": indexed_up_to}
+                assigned = idx.build(df.select("_row_id", field), field)
+            if itype == "IVF_SQ8":
+                assigned = _sq8_codes(assigned, field)
+            pq_codebook = None
+            if itype == "IVF_PQ":
+                # coarse quantizer (_cluster) for pruning + fine quantizer
+                # (PQ codes, 4 bytes/row at M=8×K=16) for ranking: the
+                # probe-scan reads M nibbles/row instead of 4·dim bytes;
+                # float vectors are touched only for the re-rank candidates.
+                # Codes are RESIDUAL-encoded (vec − assigned centroid):
+                # raw-vector codes collapse inside tight clusters — every
+                # member shares a code and ADC cannot rank within the blob
+                # (SCALING.md "residual encoding is load-bearing": 3,125-way
+                # ADC ties, recall 0; residual 0.91 at the same budget)
+                from vectordb_spark.operators.pq import ResidualPQIndex
+
+                # M must divide the dimension (each subspace = dim/M
+                # contiguous components); largest of 8/4/2/1 that does
+                m_sub = next(m for m in (8, 4, 2, 1) if (f.dimension or 0) % m == 0)
+                pqi = ResidualPQIndex(m=m_sub, seed=seed)
+                if train == "lloyd":
+                    # the bit-replayable trainer for BOTH tiers: coarse
+                    # cells came from build_lloyd above, the fine codebook
+                    # now trains on the same seeded-Lloyd discipline — a
+                    # SQL oracle can audit the full trained IVF_PQ
+                    # lifecycle (queries/ann.py table_ivfpq_trained_search)
+                    pqi.fit_residual_lloyd(
+                        idx, assigned, field, rounds=rounds, id_col="_row_id",
+                        train_mod=train_mod, train_keep=train_keep,
+                    )
+                else:
+                    pqi.fit_residual(idx, assigned, field, id_col="_row_id")
+                pq_codebook = pqi.codebook
+                assigned = pqi.codes_residual(assigned, field).select(
+                    "_row_id", "_pq_codes", "_cluster"
+                )
+            di.write(self, assigned, name, "_cluster")
+            fields = {
+                "type": itype,
+                "k": k,
+                "seed": seed,
+                "train": train,
+                "rounds": rounds if train == "lloyd" else None,
+                # sampled-trainer hash filter (None = full-corpus
+                # training); recorded so a rebuilt-from-manifest audit
+                # can replay the exact training subset
+                "train_mod": train_mod if train == "lloyd" else None,
+                "train_keep": train_keep if train == "lloyd" else None,
+                "metric": f.metric or "EUCLIDEAN",
+                "centroids": idx.centroids,
+                "cluster_sizes": {
+                    str(c): n for c, n in (idx.cluster_sizes or {}).items()
+                },
+                "pq_codebook": pq_codebook,
+                # residual-encoded codes (build ≥ r7); absent/False in
+                # older manifests → the raw-code search path still serves
+                "pq_residual": itype == "IVF_PQ",
+                # arithmetic convention the residual grid was encoded
+                # under — refresh_index refuses to mix conventions
+                "pq_residual_convention": (
+                    _PQ_RESIDUAL_CONVENTION if itype == "IVF_PQ" else None
+                ),
+                # separation statistics → the exact-fallback planner rule
+                # applies to persisted-index searches too (None = +inf)
+                "mean_intra_radius": idx.mean_intra_radius,
+                "mean_nn_centroid_dist": (
+                    None
+                    if idx.mean_nn_centroid_dist is None
+                    or math.isinf(idx.mean_nn_centroid_dist)
+                    else idx.mean_nn_centroid_dist
+                ),
+            }
+            return fields, meta["next_row_id"]
+
+        return di.build(self, di.VECTOR, field, write_dirs)
 
     def _residual_probe_matches(
         self, info: dict, field: str, sample: int = 256
@@ -2338,124 +2279,76 @@ class Table:
         return self._df_for_files(keep).where(F.col("_row_id") >= up_to)
 
     def refresh_index(self, field: str) -> dict:
-        """Incremental ANN-index refresh: rows inserted since the last
-        build/refresh self-assign to the STORED centroids (codegen
-        argmin — k inline distances, no refit, no shuffle), get their
-        stored codes (SQ8 quantization / PQ encoding against the stored
-        codebook — both stateless given the manifest), and land in a
-        new immutable delta dir partitioned by ``_cluster``; the
-        manifest extends cluster sizes and advances ``indexed_up_to``
-        in one CAS commit. A growing table keeps probe-pruned searches
-        without per-query tail scans and without re-running KMeans —
-        centroids and the separation-planner statistics stay
-        build-time until a full ``rebuild`` (the text index's delta
-        discipline, applied to vectors; the reference rebuilds from
-        scratch each cycle, table_mvp.cpp:94-203)."""
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
+        """Incremental ANN-index refresh (delta_index.py): tail rows
+        self-assign to the STORED centroids and get their stored codes
+        (SQ8 quantization / PQ encoding against the stored codebook —
+        both stateless given the manifest); the delta's sizes extend
+        ``cluster_sizes``. Centroids and the separation-planner
+        statistics stay build-time until a full ``rebuild``."""
 
-        meta = self._load_meta()
-        info = meta.get("indexes", {}).get(field)
-        if info is None:
-            raise VectorDBError(
-                "NOT_IMPLEMENTED_ERROR",
-                f"No index on field {field}; call rebuild first.",
+        def encode(info: dict, tail: DataFrame, name: str) -> int:
+            assigned = tail.select("_row_id", field).withColumn(
+                "_cluster", _nearest_centroid(field, info["centroids"])
             )
-        up_to = int(info["indexed_up_to"])
-        if up_to >= int(meta["next_row_id"]):
-            return {"field": field, "version": info["version"], "appendedRecords": 0}
-        tail = self._tail_df(up_to, meta).select("_row_id", field)
-        dists = F.array(
-            *[
-                l2_squared(F.col(field), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
-        assigned = tail.withColumn(
-            "_cluster",
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int"),
-        )
-        if info.get("type") == "IVF_SQ8":
-            from vectordb_spark.functions.distance import dot_product
-            from vectordb_spark.operators.quant import (
-                quant_scale_exprs,
-                quantize_exprs,
-            )
+            if info.get("type") == "IVF_SQ8":
+                assigned = _sq8_codes(assigned, field)
+            elif info.get("type") == "IVF_PQ":
+                from vectordb_spark.operators.pq import PQIndex, ResidualPQIndex
 
-            scale_s, _ = quant_scale_exprs(field)
-            qz_s, _ = quantize_exprs(field, "_scale")
-            assigned = (
-                assigned.withColumn("_scale", F.expr(scale_s))
-                .withColumn("_q", F.expr(qz_s).cast("array<tinyint>"))
-                .withColumn("_norm2", dot_product(F.col(field), F.col(field)))
-                .select("_row_id", "_scale", "_q", "_norm2", "_cluster")
-            )
-        elif info.get("type") == "IVF_PQ":
-            from vectordb_spark.operators.pq import PQIndex, ResidualPQIndex
-
-            if info.get("pq_residual"):
-                # Mixing residual-arithmetic conventions inside one
-                # index silently skews recall (delta codes land in
-                # different grid cells than the base codebook was
-                # trained on) — refuse and demand a full rebuild.
-                # An UNTAGGED manifest (built before the tag existed)
-                # is ambiguous, not necessarily wrong: probe it by
-                # re-encoding a sample of already-indexed rows under
-                # the current convention and comparing to their STORED
-                # codes — bytes don't lie. Match ⇒ adopt the tag (it
-                # persists with this refresh's manifest commit);
-                # mismatch or nothing verifiable ⇒ reject as before.
-                conv = info.get("pq_residual_convention")
-                if conv is None and self._residual_probe_matches(info, field):
-                    conv = _PQ_RESIDUAL_CONVENTION
-                    info["pq_residual_convention"] = conv
-                if conv != _PQ_RESIDUAL_CONVENTION:
-                    raise VectorDBError(
-                        "INDEX_CONVENTION_MISMATCH",
-                        f"IVF_PQ index on {field!r} was built under "
-                        f"residual convention {conv!r} but this engine "
-                        f"encodes {_PQ_RESIDUAL_CONVENTION!r}; delta "
-                        "codes would not be comparable to the stored "
-                        "base codes. Run rebuild() to re-encode.",
+                if info.get("pq_residual"):
+                    # Mixing residual-arithmetic conventions inside one
+                    # index silently skews recall (delta codes land in
+                    # different grid cells than the base codebook was
+                    # trained on) — refuse and demand a full rebuild.
+                    # An UNTAGGED manifest (built before the tag existed)
+                    # is ambiguous, not necessarily wrong: probe it by
+                    # re-encoding a sample of already-indexed rows under
+                    # the current convention and comparing to their STORED
+                    # codes — bytes don't lie. Match ⇒ adopt the tag (it
+                    # persists with this refresh's manifest commit);
+                    # mismatch or nothing verifiable ⇒ reject as before.
+                    conv = info.get("pq_residual_convention")
+                    if conv is None and self._residual_probe_matches(info, field):
+                        conv = _PQ_RESIDUAL_CONVENTION
+                        info["pq_residual_convention"] = conv
+                    if conv != _PQ_RESIDUAL_CONVENTION:
+                        raise VectorDBError(
+                            "INDEX_CONVENTION_MISMATCH",
+                            f"IVF_PQ index on {field!r} was built under "
+                            f"residual convention {conv!r} but this engine "
+                            f"encodes {_PQ_RESIDUAL_CONVENTION!r}; delta "
+                            "codes would not be comparable to the stored "
+                            "base codes. Run rebuild() to re-encode.",
+                        )
+                    rpqi = ResidualPQIndex(m=len(info["pq_codebook"]))
+                    rpqi.codebook = info["pq_codebook"]
+                    rpqi.coarse_centroids = info["centroids"]
+                    assigned = rpqi.codes_residual(assigned, field).select(
+                        "_row_id", "_pq_codes", "_cluster"
                     )
-                rpqi = ResidualPQIndex(m=len(info["pq_codebook"]))
-                rpqi.codebook = info["pq_codebook"]
-                rpqi.coarse_centroids = info["centroids"]
-                assigned = rpqi.codes_residual(assigned, field).select(
-                    "_row_id", "_pq_codes", "_cluster"
-                )
-            else:  # pre-residual manifest: keep its raw encoding
-                pqi = PQIndex(m=len(info["pq_codebook"]))
-                pqi.codebook = info["pq_codebook"]
-                assigned = pqi.codes(assigned, field).select(
-                    "_row_id", "_pq_codes", "_cluster"
-                )
-        else:
-            assigned = assigned.select("_row_id", field, "_cluster")
-        deltas = list(info.get("deltas", []))
-        name = f"{info['dir']}_delta{len(deltas) + 1}"
-        assigned = assigned.localCheckpoint()  # one compute: write + sizes
-        assigned.write.partitionBy("_cluster").parquet(
-            os.path.join(self.path, name)
-        )
-        delta_sizes = {
-            str(r["_cluster"]): int(r["n"])
-            for r in assigned.groupBy("_cluster")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        appended = sum(delta_sizes.values())
-        sizes = dict(info.get("cluster_sizes") or {})
-        for c, n in delta_sizes.items():
-            sizes[c] = int(sizes.get(c, 0)) + n
-        info["cluster_sizes"] = sizes
-        info["deltas"] = deltas + [name]
-        info["indexed_up_to"] = meta["next_row_id"]
-        self._save_meta(meta)
-        return {
-            "field": field,
-            "version": info["version"],
-            "appendedRecords": appended,
-        }
+                else:  # pre-residual manifest: keep its raw encoding
+                    pqi = PQIndex(m=len(info["pq_codebook"]))
+                    pqi.codebook = info["pq_codebook"]
+                    assigned = pqi.codes(assigned, field).select(
+                        "_row_id", "_pq_codes", "_cluster"
+                    )
+            else:
+                assigned = assigned.select("_row_id", field, "_cluster")
+            assigned = assigned.localCheckpoint()  # one compute: write + sizes
+            di.write(self, assigned, name, "_cluster")
+            sizes = dict(info.get("cluster_sizes") or {})
+            appended = 0
+            for r in (
+                assigned.groupBy("_cluster").agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            ):
+                c, n = str(r["_cluster"]), int(r["n"])
+                sizes[c] = int(sizes.get(c, 0)) + n
+                appended += n
+            info["cluster_sizes"] = sizes
+            return appended
+
+        return di.refresh(self, di.VECTOR, field, encode)
 
     def search_indexed_df(
         self,
@@ -2474,23 +2367,14 @@ class Table:
         only; ``nprobe=None`` auto-plans the probe list from stored
         cluster sizes (probe until ~32·limit candidates or 25% of the
         table), an int pins it."""
-        from vectordb_spark.operators.ann import IVFIndex
-
         f = self._resolve_query_field(query_field, None)
         meta = self._load_meta()
-        info = meta.get("indexes", {}).get(f.name)
+        info = di.entry(meta, di.VECTOR, f.name, required=False)
         if info is None:
             return self.search_df(
                 query_vector, query_field=f.name, limit=limit, filter=filter
             )
-        idx = IVFIndex(k=info["k"], seed=info["seed"], metric=info["metric"])
-        idx.centroids = info["centroids"]
-        idx.cluster_sizes = {
-            int(c): int(n) for c, n in (info.get("cluster_sizes") or {}).items()
-        }
-        idx.mean_intra_radius = info.get("mean_intra_radius")
-        nn = info.get("mean_nn_centroid_dist")
-        idx.mean_nn_centroid_dist = float("inf") if nn is None else float(nn)
+        idx = _ivf_index(info)
         q = _normalize_dense_query(query_vector, f)
         if nprobe is None:
             # the separation planner rule (operators/ann.py): when the
@@ -2509,37 +2393,19 @@ class Table:
                 clusters = idx.plan_probes(q, limit)
         else:
             clusters = idx.probe_clusters(q, nprobe)
-        # main dir + refresh deltas, each its own cluster-partitioned
-        # root: probe pruning (PartitionFilters on _cluster) applies
-        # per dir, then the candidate streams union
-        from functools import reduce
-
-        probed = reduce(
-            lambda a, b: a.unionByName(b),
-            (
-                (
-                    d if clusters is None
-                    else d.where(F.col("_cluster").isin(clusters))
-                )
-                for d in (
-                    self.spark.read.parquet(os.path.join(self.path, p))
-                    for p in [info["dir"], *info.get("deltas", [])]
-                )
-            ),
+        # probe pruning (PartitionFilters on _cluster) applies per dir
+        probed = di.read(
+            self,
+            info,
+            lambda d: d if clusters is None else d.where(F.col("_cluster").isin(clusters)),
         )
         base = self.df()
-        # unchanged manifest mutation_seq ⇒ no deletes/upserts since
-        # the build ⇒ the index holds no dead ids and the semi-join
-        # (a full base scan + shuffle per search) is skipped
-        clean = info.get("mutation_seq") == meta.get("mutation_seq", 0)
-        if info.get("type") == "IVF_SQ8":
+        if info.get("type") in ("IVF_SQ8", "IVF_PQ"):
             # the index may hold ids for rows deleted/upserted since the
             # build; drop them BEFORE the refine cut, or a delete-heavy
             # table would fill the candidate budget with dead ids
-            if not clean:
-                probed = probed.join(
-                    base.select("_row_id"), "_row_id", "left_semi"
-                )
+            probed = di.live_filter(meta, info, base)(probed)
+        if info.get("type") == "IVF_SQ8":
             # quantized probe-scan: rank the probed codes by the int8
             # approximation, keep refine·limit candidate ids — the scan
             # reads codes (1 B/dim), never float vectors; exact
@@ -2569,18 +2435,13 @@ class Table:
         elif info.get("type") == "IVF_PQ":
             # ADC over stored codes (M integer table lookups/row) ranks
             # the probed — or, in the fallback, ALL — rows; exact
-            # re-rank happens on the candidate join below. Same
-            # dead-id discipline as SQ8.
+            # re-rank happens on the candidate join below
             from vectordb_spark.operators.pq import (
                 adc_from_codes_expr,
                 adc_table,
                 quantize_query,
             )
 
-            if not clean:
-                probed = probed.join(
-                    base.select("_row_id"), "_row_id", "left_semi"
-                )
             refine = max(4 * limit, 64)
             if clusters is None:
                 # whole-index ADC fallback (unclusterable corpus):
@@ -2620,11 +2481,9 @@ class Table:
             )
         cand_ids = probed.select("_row_id")
         candidates = base.join(cand_ids, "_row_id", "left_semi")
-        if int(info["indexed_up_to"]) < int(meta["next_row_id"]):
-            # segment-pruned tail (r12): only post-build segments scan
-            candidates = candidates.unionByName(
-                self._tail_df(int(info["indexed_up_to"]), meta)
-            ).dropDuplicates(["_row_id"])
+        tail = di.tail_df(self, meta, info)
+        if tail is not None:
+            candidates = candidates.unionByName(tail).dropDuplicates(["_row_id"])
         ast = parse_filter(filter, self.field_map())
         qcol = F.array(*[F.lit(float(x)) for x in q])
         dist = distance_for_metric(info["metric"], F.col(f.name), qcol)
@@ -2693,15 +2552,13 @@ class Table:
 
     def rebuild_text_index(self, field: str, *, buckets: int = 64) -> dict:
         """Batch (re)build of a persisted INVERTED INDEX over a STRING
-        field — the lexical sibling of ``rebuild`` (same versioned-dir
-        double-buffer swap, X3/table_mvp.cpp:94-203): posting rows
-        (token, _row_id, tf, dl) land in a parquet dir PARTITIONED BY
-        ``_tb = pmod(xxhash64(token), buckets)``, so a query's terms
-        prune to |terms|/buckets of the index at file-listing time —
-        the lexical analog of IVF probe pruning. Corpus stats (N docs,
-        Σ doc lengths) are recorded in the manifest; ``indexed_up_to``
-        marks the unindexed tail for hybrid indexed+tail search, the
-        same T5 discipline as the vector index.
+        field — the lexical sibling of ``rebuild`` under the same
+        delta-segment protocol (delta_index.py): posting rows
+        (token, _row_id, tf, dl) PARTITIONED BY ``_tb =
+        pmod(xxhash64(token), buckets)``, so a query's terms prune to
+        |terms|/buckets of the index at file-listing time — the lexical
+        analog of IVF probe pruning. Corpus stats (N docs, Σ doc
+        lengths) ride in the manifest.
 
         Whitespace tokenization matches the query-layer BM25
         (queries/fusion.py) so indexed search reproduces the corpus
@@ -2713,30 +2570,14 @@ class Table:
             raise VectorDBError(
                 "INVALID_PAYLOAD", f"Field {field} is not a STRING field."
             )
-        meta = self._load_meta()
-        version = (
-            meta.get("text_indexes", {}).get(field, {}).get("version", 0) + 1
-        )
-        name = f"textindex_{field}_v{version}"
-        n_docs, sum_dl = self._write_text_postings(
-            self.df(), field, buckets, name
-        )
-        meta.setdefault("text_indexes", {})[field] = {
-            "version": version,
-            "dir": name,
-            "deltas": [],
-            "buckets": buckets,
-            "n_docs": n_docs,
-            "sum_dl": sum_dl,
-            "indexed_up_to": meta["next_row_id"],
-            "mutation_seq": int(meta.get("mutation_seq", 0)),
-        }
-        self._save_meta(meta)
-        return {
-            "field": field,
-            "version": version,
-            "indexedRecords": n_docs,
-        }
+
+        def write_dirs(meta: dict, name: str):
+            n_docs, sum_dl = self._write_text_postings(
+                self.df(), field, buckets, name
+            )
+            return {"buckets": buckets, "n_docs": n_docs, "sum_dl": sum_dl}, n_docs
+
+        return di.build(self, di.TEXT, field, write_dirs)
 
     def _write_text_postings(
         self, df: DataFrame, field: str, buckets: int, name: str
@@ -2748,91 +2589,59 @@ class Table:
         queries resolve from the index alone — the Lucene
         positions-in-postings layout."""
         words = F.split(F.col(field), " ", -1)
-        postings = (
-            df.select(
-                "_row_id",
-                F.size(words).cast("long").alias("_dl"),
-                F.posexplode(words).alias("_p0", "_token"),
-            )
-            .groupBy("_row_id", "_dl", "_token")
-            .agg(
-                F.count(F.lit(1)).alias("_tf"),
-                F.sort_array(F.collect_list(F.col("_p0") + 1)).alias("_pos"),
-            )
-            .withColumn(
-                "_tb", F.pmod(F.xxhash64("_token"), F.lit(buckets)).cast("int")
-            )
+        postings = self._text_postings(df, field).withColumn(
+            "_tb", F.pmod(F.xxhash64("_token"), F.lit(buckets)).cast("int")
         )
         n_docs, sum_dl = df.select(
             F.count(F.lit(1)), F.sum(F.size(words)).cast("long")
         ).first()
-        (
-            # shuffle key (_tb, row-hash): plain _tb would funnel each
-            # bucket — and with zipfian tokens, the hot bucket holds a
-            # large corpus fraction — through ONE writer task. The
-            # row-hash salt splits every bucket across 4 writers (4
-            # files/bucket dir) while partitionBy still lays out one
-            # directory per bucket for file-listing pruning.
+        # shuffle key (_tb, row-hash): plain _tb would funnel each
+        # bucket — and with zipfian tokens, the hot bucket holds a
+        # large corpus fraction — through ONE writer task. The row-hash
+        # salt splits every bucket across 4 writers (4 files/bucket
+        # dir) while partitionBy still lays out one directory per
+        # bucket for file-listing pruning.
+        di.write(
+            self,
             postings.repartition(
                 F.col("_tb"), F.pmod(F.xxhash64("_row_id"), F.lit(4))
-            )
-            .write.mode("overwrite")
-            .partitionBy("_tb")
-            .parquet(os.path.join(self.path, name))
+            ),
+            name,
+            "_tb",
         )
         return int(n_docs or 0), int(sum_dl or 0)
 
     def refresh_text_index(self, field: str) -> dict:
-        """Incremental index refresh: postings for ONLY the unindexed
-        tail (rows inserted since the last build/refresh) land in a new
-        immutable DELTA dir alongside the main index — same bucket
-        partitioning, so query-term pruning applies per dir — and the
-        manifest extends (N, Σdl) and advances ``indexed_up_to``
-        atomically (CAS commit). A growing table never pays a full
-        rebuild just to keep search off the live-tail scan path: the
-        Lucene segment-commit discipline, with the manifest as the
-        segments file. Deletes are untouched — dead postings in older
-        dirs stay handled by the mutation_seq semi-join until a full
-        ``rebuild_text_index`` resets the baseline (= Lucene merge)."""
-        meta = self._load_meta()
-        info = meta.get("text_indexes", {}).get(field)
-        if info is None:
-            raise VectorDBError(
-                "NOT_IMPLEMENTED_ERROR",
-                f"No text index on field {field}; call rebuild_text_index first.",
-            )
-        up_to = int(info["indexed_up_to"])
-        if up_to >= int(meta["next_row_id"]):
-            return {"field": field, "version": info["version"], "appendedRecords": 0}
-        tail = self._tail_df(up_to, meta)
-        deltas = list(info.get("deltas", []))
-        name = f"{info['dir']}_delta{len(deltas) + 1}"
-        n_docs, sum_dl = self._write_text_postings(
-            tail, field, int(info["buckets"]), name
-        )
-        info["deltas"] = deltas + [name]
-        info["n_docs"] = int(info["n_docs"]) + n_docs
-        info["sum_dl"] = int(info["sum_dl"]) + sum_dl
-        info["indexed_up_to"] = meta["next_row_id"]
-        self._save_meta(meta)
-        return {
-            "field": field,
-            "version": info["version"],
-            "appendedRecords": n_docs,
-        }
+        """Incremental text-index refresh (delta_index.py): postings
+        for ONLY the unindexed tail land in a delta dir with the same
+        bucket partitioning, and (N, Σdl) extend by the tail's."""
 
-    def _text_postings(self, df: DataFrame, field: str, terms: list[str]) -> DataFrame:
-        """(_row_id, _dl, _token, _tf, _pos) for query terms, computed
-        directly from text — the unindexed-tail scoring path."""
-        words = F.split(F.col(field), " ", -1)
-        return (
-            df.select(
-                "_row_id",
-                F.size(words).cast("long").alias("_dl"),
-                F.posexplode(words).alias("_p0", "_token"),
+        def encode(info: dict, tail: DataFrame, name: str) -> int:
+            n_docs, sum_dl = self._write_text_postings(
+                tail, field, int(info["buckets"]), name
             )
-            .where(F.col("_token").isin(*terms))
-            .groupBy("_row_id", "_dl", "_token")
+            info["n_docs"] = int(info["n_docs"]) + n_docs
+            info["sum_dl"] = int(info["sum_dl"]) + sum_dl
+            return n_docs
+
+        return di.refresh(self, di.TEXT, field, encode)
+
+    def _text_postings(
+        self, df: DataFrame, field: str, terms: list[str] | None = None
+    ) -> DataFrame:
+        """(_row_id, _dl, _token, _tf, _pos) computed directly from
+        text, for every token or only ``terms`` (the unindexed-tail
+        scoring path)."""
+        words = F.split(F.col(field), " ", -1)
+        tokens = df.select(
+            "_row_id",
+            F.size(words).cast("long").alias("_dl"),
+            F.posexplode(words).alias("_p0", "_token"),
+        )
+        if terms is not None:
+            tokens = tokens.where(F.col("_token").isin(*terms))
+        return (
+            tokens.groupBy("_row_id", "_dl", "_token")
             .agg(
                 F.count(F.lit(1)).alias("_tf"),
                 F.sort_array(F.collect_list(F.col("_p0") + 1)).alias("_pos"),
@@ -2871,15 +2680,8 @@ class Table:
         from vectordb_spark.functions.text_rank import bm25_sq_expr
 
         meta = self._load_meta()
-        tidx = meta.get("text_indexes", {})
-        field = query_field or next(iter(tidx), None)
-        info = tidx.get(field) if field else None
-        if info is None:
-            raise VectorDBError(
-                "NOT_IMPLEMENTED_ERROR",
-                f"No text index on field {field or '<none>'}; "
-                "call rebuild_text_index first.",
-            )
+        field = query_field or next(iter(meta.get(di.TEXT.key, {})), None)
+        info = di.entry(meta, di.TEXT, field)
         seq_terms = [t for t in query_text.split(" ") if t]
         terms = sorted(set(seq_terms))
         if not terms:
@@ -2892,47 +2694,23 @@ class Table:
         from vectordb_spark.functions.hashing import pmod_bucket
 
         tbs = [pmod_bucket(t, buckets) for t in terms]
-        # main dir + refresh deltas: each is its own bucket-partitioned
-        # root, read with the same (_tb PartitionFilter, _token
-        # predicate) pruning and unioned — the Lucene multi-segment read
-        from functools import reduce
-
-        idx = reduce(
-            lambda a, b: a.unionByName(b),
-            (
-                spark.read.parquet(os.path.join(self.path, d))
-                .where(
-                    F.col("_tb").isin(sorted(set(tbs)))
-                    & F.col("_token").isin(*terms)
-                )
-                .select(
-                    "_row_id", "_dl", "_token", "_tf",
-                    *(["_pos"] if phrase else []),
-                )
-                for d in [info["dir"], *info.get("deltas", [])]
-            ),
+        # (_tb PartitionFilter, _token predicate) pruning per index dir
+        idx = di.read(
+            self,
+            info,
+            lambda d: d.where(
+                F.col("_tb").isin(sorted(set(tbs))) & F.col("_token").isin(*terms)
+            ).select("_row_id", "_dl", "_token", "_tf", *(["_pos"] if phrase else [])),
         )
         base = self.df()
-        up_to = int(info["indexed_up_to"])
-        has_tail = up_to < int(meta["next_row_id"])
-        # dead-id discipline (same as the SQ8/PQ vector paths): the
-        # index may hold postings for rows deleted since the build —
-        # drop them before df counting and the top-k cut. Corpus stats
-        # (N, Σdl) stay build-time until rebuild — the Lucene
-        # convention for deleted docs (slightly stale idf, never
-        # wrong candidates). The manifest mutation_seq tells us when
-        # this is NECESSARY: unchanged seq ⇒ no deletes since the
-        # build ⇒ skip the semi-join (a full base scan + shuffle)
-        # entirely; likewise an unmoved row-id cursor skips both tail
-        # scans. The clean-index fast path therefore touches only the
-        # pruned postings + the top-k row fetch.
-        clean = info.get("mutation_seq") == meta.get("mutation_seq", 0)
-        if not clean:
-            idx = idx.join(base.select("_row_id"), "_row_id", "left_semi")
-        postings = idx
-        if has_tail:
-            # segment-pruned tail (r12): only post-build segments scan
-            tail = self._tail_df(up_to, meta)
+        # dead postings drop before df counting and the top-k cut;
+        # (N, Σdl) stay build-time (Lucene's deleted-doc convention:
+        # slightly stale idf, never wrong candidates). A clean index
+        # with no tail touches only the pruned postings + the top-k
+        # row fetch.
+        postings = di.live_filter(meta, info, base)(idx)
+        tail = di.tail_df(self, meta, info)
+        if tail is not None:
             tail_postings = self._text_postings(tail, field, terms)
             if not phrase:
                 tail_postings = tail_postings.drop("_pos")
@@ -2979,7 +2757,7 @@ class Table:
         dfreq = postings.groupBy("_token").agg(
             F.countDistinct("_row_id").alias("_df")
         )
-        if has_tail:
+        if tail is not None:
             words = F.split(F.col(field), " ", -1)
             stats = (
                 tail.select(
@@ -3049,7 +2827,8 @@ class Table:
 
     def rebuild_sparse_index(self, field: str, *, buckets: int = 64) -> dict:
         """Inverted index over a SPARSE vector field (the SPLADE-style
-        retrieval layout): one posting row per nonzero (doc, dim),
+        retrieval layout) under the delta-segment protocol
+        (delta_index.py): one posting row per nonzero (doc, dim),
         hive-partitioned by ``_db = dim % buckets`` so a query's
         nonzero dims prune the posting scan at file-listing time, plus
         a norms sidecar (_row_id, _norm2 — 16 B/row) that completes
@@ -3063,86 +2842,36 @@ class Table:
             raise VectorDBError(
                 "INVALID_PAYLOAD", f"Field {field} is not a sparse vector field."
             )
-        from vectordb_spark.functions.distance import sparse_norm_sq
-
-        meta = self._load_meta()
-        version = (
-            meta.get("sparse_indexes", {}).get(field, {}).get("version", 0) + 1
+        return di.build(
+            self,
+            di.SPARSE,
+            field,
+            lambda meta, name: (
+                {"buckets": buckets},
+                self._write_sparse_index(self.df(), field, buckets, name),
+            ),
         )
-        name = f"sparseindex_{field}_v{version}"
-        df = self.df()
-        self._write_sparse_postings(df, field, buckets, name)
-        norms_name = f"{name}_norms"
-        df.select(
-            "_row_id", sparse_norm_sq(F.col(field)).alias("_norm2")
-        ).write.mode("overwrite").parquet(os.path.join(self.path, norms_name))
-        n = self._dir_count(norms_name)
-        meta.setdefault("sparse_indexes", {})[field] = {
-            "version": version,
-            "dir": name,
-            "norms_dir": norms_name,
-            "buckets": buckets,
-            "deltas": [],
-            "norms_deltas": [],
-            "indexed_up_to": meta["next_row_id"],
-            "mutation_seq": int(meta.get("mutation_seq", 0)),
-        }
-        self._save_meta(meta)
-        return {"field": field, "version": version, "indexedRecords": n}
 
     def refresh_sparse_index(self, field: str) -> dict:
-        """Incremental sparse-index refresh (r12 — the sparse twin of
-        ``refresh_text_index``): postings and norms for ONLY the
-        unindexed tail (rows inserted since the last build/refresh)
-        land in new immutable DELTA dirs beside the main index — same
-        ``_db`` bucket partitioning, so query-dim pruning applies per
-        dir — and ``indexed_up_to`` advances atomically. A growing
-        table never pays a full posting rebuild to keep search off the
-        live-tail scan path. Deletes are untouched: dead postings in
-        older dirs stay handled by the mutation_seq semi-join until a
-        full ``rebuild_sparse_index`` resets the baseline (the Lucene
-        segment-commit discipline)."""
+        """Incremental sparse-index refresh (delta_index.py): postings
+        and norms for ONLY the unindexed tail land in a delta dir and
+        its norms sidecar, with the same ``_db`` bucket partitioning."""
+        return di.refresh(
+            self,
+            di.SPARSE,
+            field,
+            lambda info, tail, name: self._write_sparse_index(
+                tail, field, int(info["buckets"]), name
+            ),
+        )
+
+    def _write_sparse_index(
+        self, df: DataFrame, field: str, buckets: int, name: str
+    ) -> int:
+        """Postings dir ``name`` + its norms sidecar; returns the number
+        of rows indexed."""
         from vectordb_spark.functions.distance import sparse_norm_sq
 
-        meta = self._load_meta()
-        info = meta.get("sparse_indexes", {}).get(field)
-        if info is None:
-            raise VectorDBError(
-                "NOT_IMPLEMENTED_ERROR",
-                f"No sparse index on field {field}; call "
-                "rebuild_sparse_index first.",
-            )
-        up_to = int(info["indexed_up_to"])
-        if up_to >= int(meta["next_row_id"]):
-            return {
-                "field": field,
-                "version": info["version"],
-                "appendedRecords": 0,
-            }
-        tail = self._tail_df(up_to, meta)
-        deltas = list(info.get("deltas", []))
-        name = f"{info['dir']}_delta{len(deltas) + 1}"
-        self._write_sparse_postings(tail, field, int(info["buckets"]), name)
-        norms_name = f"{name}_norms"
-        tail.select(
-            "_row_id", sparse_norm_sq(F.col(field)).alias("_norm2")
-        ).write.mode("overwrite").parquet(os.path.join(self.path, norms_name))
-        n = self._dir_count(norms_name)
-        info["deltas"] = deltas + [name]
-        info["norms_deltas"] = list(info.get("norms_deltas", [])) + [
-            norms_name
-        ]
-        info["indexed_up_to"] = meta["next_row_id"]
-        self._save_meta(meta)
-        return {
-            "field": field,
-            "version": info["version"],
-            "appendedRecords": n,
-        }
-
-    def _write_sparse_postings(
-        self, df: DataFrame, field: str, buckets: int, name: str
-    ) -> None:
         v = F.col(field)
         postings = (
             df.select(
@@ -3158,16 +2887,21 @@ class Table:
             )
             .withColumn("_db", F.pmod(F.col("_dim"), F.lit(buckets)).cast("int"))
         )
-        (
-            # same zipf-skew salting as the text index: hot dims split
-            # across 4 writers, one dir per bucket for pruning
+        # same zipf-skew salting as the text index: hot dims split
+        # across 4 writers, one dir per bucket for pruning
+        di.write(
+            self,
             postings.repartition(
                 F.col("_db"), F.pmod(F.xxhash64("_row_id"), F.lit(4))
-            )
-            .write.mode("overwrite")
-            .partitionBy("_db")
-            .parquet(os.path.join(self.path, name))
+            ),
+            name,
+            "_db",
         )
+        norms = di.sidecar_dir(name, di.SPARSE.sidecar)
+        di.write(
+            self, df.select("_row_id", sparse_norm_sq(v).alias("_norm2")), norms
+        )
+        return self._dir_count(norms)
 
     def search_sparse_indexed_df(
         self,
@@ -3188,14 +2922,14 @@ class Table:
         re-scores candidates with the canonical sparse distance — the
         index prunes, never approximates. Tail rows (inserted since
         the build) join both candidate streams via direct scans;
-        dead ids drop via the mutation_seq semi-join when needed."""
+        dead ids drop via the protocol's live filter (delta_index.py)."""
         f = self._resolve_query_field(query_field, None)
         if not f.field_type.is_sparse_vector:
             raise VectorDBError(
                 "INVALID_PAYLOAD", f"Field {f.name} is not a sparse vector field."
             )
         meta = self._load_meta()
-        info = meta.get("sparse_indexes", {}).get(f.name)
+        info = di.entry(meta, di.SPARSE, f.name, required=False)
         if info is None:
             return self.search_df(
                 query_vector, query_field=f.name, limit=limit, filter=filter
@@ -3204,47 +2938,20 @@ class Table:
         dims = [int(i) for i in q["indices"]]
         buckets = int(info["buckets"])
         dbs = sorted({d % buckets for d in dims})
-        spark = self.spark
         base = self.df()
         ast = parse_filter(filter, self.field_map())
-        clean = info.get("mutation_seq") == meta.get("mutation_seq", 0)
-        up_to = int(info["indexed_up_to"])
-        has_tail = up_to < int(meta["next_row_id"])
-
-        from functools import reduce as _reduce
-
-        idx_ids = _reduce(
-            DataFrame.unionByName,
-            [
-                spark.read.parquet(os.path.join(self.path, d))
-                .where(F.col("_db").isin(dbs) & F.col("_dim").isin(dims))
-                .select("_row_id")
-                # main dir + refresh deltas (refresh_sparse_index):
-                # each its own bucket-partitioned root, dim-pruned
-                # independently — same layout, so per-dir hive reads
-                # union cleanly
-                for d in [info["dir"], *info.get("deltas", [])]
-            ],
-        )
-        norms = _reduce(
-            DataFrame.unionByName,
-            [
-                spark.read.parquet(os.path.join(self.path, d))
-                for d in [
-                    info["norms_dir"],
-                    *info.get("norms_deltas", []),
-                ]
-            ],
-        )
-        if not clean:
-            live = base.select("_row_id")
-            idx_ids = idx_ids.join(live, "_row_id", "left_semi")
-            norms = norms.join(live, "_row_id", "left_semi")
-        if has_tail:
+        live = di.live_filter(meta, info, base)
+        idx_ids = live(di.read(
+            self,
+            info,
+            lambda d: d.where(F.col("_db").isin(dbs) & F.col("_dim").isin(dims))
+            .select("_row_id"),
+        ))
+        norms = live(di.read(self, info, sidecar=di.SPARSE.sidecar))
+        tail = di.tail_df(self, meta, info)
+        if tail is not None:
             from vectordb_spark.functions.distance import sparse_norm_sq
 
-            # segment-pruned tail (r12): only post-build segments scan
-            tail = self._tail_df(up_to, meta)
             v = F.col(f.name)
             tail_ids = tail.select(
                 "_row_id", F.explode(v.getField("indices")).alias("_dim")
@@ -3408,6 +3115,52 @@ def _validate_sparse(v, dimension: int) -> Row:
             raise _SkipRecord()
         prev = i
     return Row(indices=[int(i) for i in idx], values=[float(x) for x in vals])
+
+
+def _ivf_index(info: dict):
+    """The coarse quantizer persisted in a manifest entry (an index or
+    the cluster layout): centroids, sizes and separation statistics."""
+    from vectordb_spark.operators.ann import IVFIndex
+
+    idx = IVFIndex(k=info["k"], seed=info["seed"], metric=info["metric"])
+    idx.centroids = info["centroids"]
+    idx.cluster_sizes = {
+        int(c): int(n) for c, n in (info.get("cluster_sizes") or {}).items()
+    }
+    idx.mean_intra_radius = info.get("mean_intra_radius")
+    nn = info.get("mean_nn_centroid_dist")
+    idx.mean_nn_centroid_dist = float("inf") if nn is None else float(nn)
+    return idx
+
+
+def _nearest_centroid(field: str, centroids: list) -> Column:
+    """0-based index of the nearest centroid as a codegen Column — k
+    inline distance expressions + array argmin, no shuffle, no UDF."""
+    from vectordb_spark.functions.distance import l2_squared, vector_literal
+
+    dists = F.array(
+        *[l2_squared(F.col(field), vector_literal(c)) for c in centroids]
+    )
+    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+
+
+def _sq8_codes(assigned: DataFrame, field: str) -> DataFrame:
+    """IVF_SQ8 index rows: int8 codes + per-row scale + exact squared
+    norm, NOT the float vectors — the probe-scan reads 1 byte/dim
+    instead of 4, a physical 4× bandwidth saving. Exact distances come
+    from re-joining the base table for the (small) re-rank candidate
+    set only."""
+    from vectordb_spark.functions.distance import dot_product
+    from vectordb_spark.operators.quant import quant_scale_exprs, quantize_exprs
+
+    scale_s, _ = quant_scale_exprs(field)
+    qz_s, _ = quantize_exprs(field, "_scale")
+    return (
+        assigned.withColumn("_scale", F.expr(scale_s))
+        .withColumn("_q", F.expr(qz_s).cast("array<tinyint>"))
+        .withColumn("_norm2", dot_product(F.col(field), F.col(field)))
+        .select("_row_id", "_scale", "_q", "_norm2", "_cluster")
+    )
 
 
 def _normalize_dense_query(query_vector, f: FieldSchema) -> list[float]:
