@@ -504,11 +504,11 @@ def test_fit_residual_lloyd_sampled_subset(spark):
 
 
 def test_encode_np_matches_expr_both_dims(spark):
-    """r11: the Arrow-batched numpy encode produces the SAME 1-based
-    codes as the literal-Column encode — at the narrow table dim AND
-    at the wide (960-d class) dim where it is the measured winner —
-    and PQIndex.codes(impl=...) routes to both without changing a
-    value or the column type."""
+    """The Arrow-batched numpy encode produces the SAME 1-based codes
+    as the literal-Column encode — at the narrow table dim AND at the
+    wide (960-d class) dim where it is the measured winner — and
+    PQIndex.codes, which picks between them by dim, returns those codes
+    without changing a value or the column type."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -524,34 +524,35 @@ def test_encode_np_matches_expr_both_dims(spark):
         expr_codes = {
             r["vec_id"]: list(r["c"])
             for r in df.withColumn("_g", F.expr(grid_s))
-            .select(
-                "vec_id", F.expr(PQ.encode_expr("_g", cb)).alias("c")
-            )
+            .select("vec_id", PQ.encode_expr("_g", cb).alias("c"))
             .collect()
         }
-        np_df = df.select(
-            "vec_id", PQ.encode_np_udf(cb)(F.col("embedding")).alias("c")
-        )
+        np_df = PQ.encode_arrow_map(df, "embedding", cb, "c").select("vec_id", "c")
         np_codes = {r["vec_id"]: list(r["c"]) for r in np_df.collect()}
         assert np_codes == expr_codes, f"dim={dim}"
         assert dict(np_df.dtypes)["c"] == "array<bigint>"
 
-    # PQIndex.codes: the two impls agree end-to-end (auto picks np at
-    # wide dims, expr below 256)
-    idx = PQ.PQIndex(seed=11).fit(df, "embedding")
-    a = {
-        r["vec_id"]: list(r["_pq_codes"])
-        for r in idx.codes(df, "embedding", impl="expr").select(
-            "vec_id", "_pq_codes"
-        ).collect()
-    }
-    b = {
-        r["vec_id"]: list(r["_pq_codes"])
-        for r in idx.codes(df, "embedding", impl="np").select(
-            "vec_id", "_pq_codes"
-        ).collect()
-    }
-    assert a == b
+        # PQIndex.codes agrees with both encoders on a trained codebook
+        idx = PQ.PQIndex(seed=11).fit(df, "embedding")
+        coded = idx.codes(df, "embedding")
+        a = {
+            r["vec_id"]: list(r["_pq_codes"])
+            for r in coded.select("vec_id", "_pq_codes").collect()
+        }
+        b = {
+            r["vec_id"]: list(r["c"])
+            for r in df.withColumn("_g", F.expr(grid_s))
+            .select("vec_id", PQ.encode_expr("_g", idx.codebook).alias("c"))
+            .collect()
+        }
+        c = {
+            r["vec_id"]: list(r["c"])
+            for r in PQ.encode_arrow_map(df, "embedding", idx.codebook, "c")
+            .select("vec_id", "c")
+            .collect()
+        }
+        assert a == b == c, f"dim={dim}"
+        assert dict(coded.dtypes)["_pq_codes"] == "array<bigint>"
 
 
 def test_pq_fit_hash_sample_string_ids_under_ansi(spark):
@@ -590,7 +591,7 @@ def test_pq_fit_hash_sample_string_ids_under_ansi(spark):
 
 def test_encode_arrow_map_passthrough_and_nulls(spark):
     """r12 optimization: encode_arrow_map (the mapInArrow encode that
-    PQIndex.codes(impl="np") now routes through) must append codes
+    PQIndex.codes routes wide vectors through) must append codes
     bit-identical to encode_expr while passing every other column
     through aligned — the flatten/reshape path would silently
     misalign rows if it mishandled batch slicing — and must refuse
@@ -614,7 +615,7 @@ def test_encode_arrow_map_passthrough_and_nulls(spark):
     want = {
         r["vec_id"]: (r["label"], list(r["c"]))
         for r in df.withColumn("_g", F.expr(grid_s))
-        .select("vec_id", "label", F.expr(PQ.encode_expr("_g", cb)).alias("c"))
+        .select("vec_id", "label", PQ.encode_expr("_g", cb).alias("c"))
         .collect()
     }
     out = PQ.encode_arrow_map(df, "embedding", cb, "_pq_codes")

@@ -17,11 +17,32 @@ Sparse vectors are ``struct<indices: array<int>, values: array<float>>``
 mirroring the reference wire format (web_controller.hpp:762-788); sparse
 distances walk the query's index list with a map lookup on the row side
 (reference merge-join: engine/db/vector.cpp:7-100).
+
+Two contracts every vector query relies on live here and nowhere else:
+
+- **Literals cost one JVM call.** :func:`vector_literal`,
+  :func:`bigint_literal` and :func:`sparse_vector_literal` render the
+  whole (possibly nested) array as SQL text and parse it with one
+  ``F.expr``; per-element ``F.lit`` pays one Python→JVM round trip per
+  element (a 16×64 centroid matrix took ~0.65 s that way). Doubles are
+  written with ``repr`` (shortest round-trip form) plus the ``D``
+  suffix, so every value — ``-0.0``, subnormals, NaN and ±inf via
+  ``CAST`` — is bit-identical to ``F.lit(float(v))``, and the optimizer
+  folds the tree into the same single literal.
+- **Nearest centroid is a first-occurrence argmin.**
+  :func:`nearest_centroid_position` is ``array_position(d,
+  array_min(d))`` over one ``transform`` of a centroid-matrix literal,
+  so ties go to the lowest index, and a NULL or short vector (NULL
+  distances) gives NULL. Its result is 1-based ``bigint``, like DuckDB's
+  ``list_position``: the form PQ codes and coarse cells store.
+  :func:`nearest_centroid` subtracts 1 and casts to ``int``: the 0-based
+  form ``_cluster`` stores.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import math
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -42,98 +63,57 @@ def _dz(x: Column) -> Column:
     return x.cast("double")
 
 
-# Above this dimension the unrolled literal-query forms fall back to
-# the lambda fold: a 1000-term expression tree costs more in codegen
-# compile than it saves per row, and Spark's 64 KB method splitter
-# starts fragmenting it.
-UNROLL_MAX_DIM = 128
+def _sql_double(x: float) -> str:
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return repr(x) + "D"
 
 
-def _unrolled_sum(terms: list[Column]) -> Column:
-    """Left-associated sum STARTING FROM +0.0 — the exact fold order
-    `_fold_sum` uses (the leading 0.0 matters: it normalizes a -0.0
-    first term to +0.0, keeping the unrolled forms bit-identical)."""
-    from functools import reduce
-
-    return reduce(lambda acc, t: acc + t, terms, F.lit(0.0))
-
-
-def l2_squared_lit(a: ColumnOrName, q: Sequence[float]) -> Column:
-    """Squared L2 against a LITERAL query vector, unrolled into a flat
-    codegen-friendly expression: `aggregate`/`zip_with` lambdas are
-    interpreted per element with per-row array allocation, while the
-    unrolled element_at chain whole-stage-codegens — measured 1.75×
-    on a 1M × 64-d exact top-10 (round 9). Same left-to-right
-    double-precision order as :func:`l2_squared` → bit-identical
-    distances (verified over the corpus and pinned in
-    tests/test_distance_unroll.py); falls back to the fold above
-    UNROLL_MAX_DIM dims.
-
-    ADOPTION NOTE (round 9): NOT wired into the serving paths —
-    measured end-to-end, the ~384-node expression tree costs ~0.6 s of
-    Catalyst analysis PER QUERY, which at the driver's scale factors
-    (≤ 5k-row vector tables) outweighs the execution win by 4×; the
-    break-even is ≈ 500k rows. On a real cluster corpus the _lit forms
-    are the right default — flip the call sites in operators/knn.py /
-    table.py when the deployment's row counts justify it (the fold and
-    the unrolled form are bit-interchangeable by construction —
-    including on MALFORMED rows, BOTH directions: try_element_at
-    yields NULL on arrays SHORTER than the query, exactly like the
-    zip_with fold — plain element_at would raise INVALID_ARRAY_INDEX
-    under Spark 4 ANSI mode and kill the query (ADVICE r9) — and the
-    size()-equality guard yields NULL on arrays LONGER than the query,
-    where the fold's zip_with pads the query side with NULL but a bare
-    unrolled chain would silently sum only the first len(q) dims and
-    return a finite distance the fold never produces)."""
-    q = [float(x) for x in q]
-    if len(q) > UNROLL_MAX_DIM:
-        return l2_squared(a, vector_literal(q))
-    c = _c(a)
-    terms = []
-    for i, v in enumerate(q):
-        d = _dz(F.try_element_at(c, F.lit(i + 1))) - F.lit(v)
-        terms.append(d * d)
-    return F.when(F.size(c) == F.lit(len(q)), _unrolled_sum(terms))
+def _sql_array(values: Iterable, elem) -> str:
+    """``array(...)`` SQL text; nested sequences become nested arrays."""
+    return "array(" + ", ".join(
+        _sql_array(v, elem) if isinstance(v, Iterable) else elem(v)
+        for v in values
+    ) + ")"
 
 
-def dot_product_lit(a: ColumnOrName, q: Sequence[float]) -> Column:
-    """Dot product against a LITERAL query vector, unrolled (see
-    :func:`l2_squared_lit`)."""
-    q = [float(x) for x in q]
-    if len(q) > UNROLL_MAX_DIM:
-        return dot_product(a, vector_literal(q))
-    c = _c(a)
-    return F.when(
-        F.size(c) == F.lit(len(q)),
-        _unrolled_sum(
-            [
-                _dz(F.try_element_at(c, F.lit(i + 1))) * F.lit(v)
-                for i, v in enumerate(q)
-            ]
-        ),
+def vector_literal(values: Sequence) -> Column:
+    """A query vector as one ``array<double>`` literal; a matrix (e.g.
+    the centroids) gives ``array<array<double>>``."""
+    return F.expr(_sql_array(values, _sql_double))
+
+
+def bigint_literal(values: Sequence) -> Column:
+    """Integers (PQ codebooks, ADC tables) as one ``array<bigint>``
+    literal, nested like ``values``."""
+    return F.expr(_sql_array(values, lambda v: f"{int(v)}L"))
+
+
+def sparse_vector_literal(indices: Sequence[int], values: Sequence[float]) -> Column:
+    """A sparse query as ``struct<indices: array<int>, values:
+    array<float>>``; the values pass through double first, as
+    ``F.lit(float(v))`` did."""
+    idx = _sql_array(indices, lambda i: str(int(i)))
+    vals = _sql_array(values, _sql_double)
+    return F.expr(
+        f"named_struct('indices', {idx}, 'values', CAST({vals} AS ARRAY<FLOAT>))"
     )
-
-
-def distance_for_metric_lit(
-    metric: str, a: ColumnOrName, q: Sequence[float]
-) -> Column:
-    """:func:`distance_for_metric` with a literal query vector —
-    dispatches to the unrolled forms (COSINE assumes both sides
-    normalized, as everywhere in the engine)."""
-    m = metric.upper()
-    if m == "EUCLIDEAN":
-        return l2_squared_lit(a, q)
-    if m == "COSINE":
-        return F.lit(1.0) - dot_product_lit(a, q)
-    if m in ("DOT_PRODUCT", "DOTPRODUCT", "IP"):
-        return -dot_product_lit(a, q)
-    raise ValueError(f"unknown metric: {metric}")
 
 
 def l2_squared(a: ColumnOrName, b: ColumnOrName) -> Column:
     """Squared L2 distance between two array-typed vector columns."""
     terms = F.zip_with(_c(a), _c(b), lambda x, y: (_dz(x) - _dz(y)) * (_dz(x) - _dz(y)))
     return _fold_sum(terms)
+
+
+def l2_squared_int(a: ColumnOrName, b: ColumnOrName) -> Column:
+    """Squared L2 between two integer arrays in exact 64-bit arithmetic
+    (the PQ grid distance)."""
+    terms = F.zip_with(_c(a), _c(b), lambda x, y: (x - y) * (x - y))
+    return F.aggregate(terms, F.lit(0).cast("bigint"), lambda acc, v: acc + v)
 
 
 def dot_product(a: ColumnOrName, b: ColumnOrName) -> Column:
@@ -173,11 +153,6 @@ def l2_normalize(a: ColumnOrName, *, as_float: bool = True) -> Column:
     return out
 
 
-def vector_literal(values: Sequence[float]) -> Column:
-    """A query vector as a literal array<double> column."""
-    return F.array(*[F.lit(float(v)) for v in values])
-
-
 def distance_for_metric(metric: str, a: ColumnOrName, b: ColumnOrName) -> Column:
     """Dense distance dispatch by reference metric name."""
     m = metric.upper()
@@ -188,6 +163,28 @@ def distance_for_metric(metric: str, a: ColumnOrName, b: ColumnOrName) -> Column
     if m in ("DOT_PRODUCT", "DOTPRODUCT", "IP"):
         return dot_product_distance(a, b)
     raise ValueError(f"unknown metric: {metric}")
+
+
+def nearest_centroid_position(
+    vec: ColumnOrName, centroids: Column | Sequence, dist=l2_squared
+) -> Column:
+    """1-based ``bigint`` position of the centroid nearest ``vec`` under
+    ``dist``: the first-occurrence argmin described in the module
+    docstring. ``centroids`` is a matrix (built with
+    :func:`vector_literal`) or an array-of-arrays Column."""
+    if not isinstance(centroids, Column):
+        centroids = vector_literal(centroids)
+    v = _c(vec)
+    d = F.transform(centroids, lambda c: dist(v, c))
+    return F.array_position(d, F.array_min(d))
+
+
+def nearest_centroid(
+    vec: ColumnOrName, centroids: Column | Sequence, dist=l2_squared
+) -> Column:
+    """0-based ``int`` index of the nearest centroid — the ``_cluster``
+    format (see :func:`nearest_centroid_position`)."""
+    return (nearest_centroid_position(vec, centroids, dist) - 1).cast("int")
 
 
 # --------------------------------------------------------------------------

@@ -27,11 +27,12 @@ reference's own pre/post-rebuild test discipline, db_server.cpp:1606-12).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vectordb_spark.functions.distance import (
     distance_for_metric,
+    nearest_centroid,
     vector_literal,
 )
 from vectordb_spark.operators.knn import knn
@@ -254,8 +255,6 @@ class IVFIndex:
         The filter is plain int64 arithmetic, so a SQL oracle replays
         the training subset bit-exactly — sampling costs nothing in
         auditability, unlike ``build``'s MLlib ``.sample()``."""
-        from vectordb_spark.functions.distance import l2_squared
-
         k = self.k
         if (train_mod is None) != (train_keep is None):
             raise ValueError("set both train_mod and train_keep, or neither")
@@ -270,25 +269,6 @@ class IVFIndex:
         ]
         assert len(seeds) == k, f"need >= {k} rows to seed {k} clusters"
         dim = len(seeds[0])
-
-        def _assign(cents) -> Column:
-            # Centroids as ONE 2-D array literal (r13, guide §5 "very
-            # large query plans"): the previous form built k fresh
-            # CreateArray(dim double literals) trees per round, so every
-            # Lloyd round re-analyzed and janino-recompiled a
-            # value-bearing k·dim-leaf expression. A nested F.lit lands
-            # in the generated code as a references[] object — the tree
-            # shape (and the compiled plan) is identical for every
-            # round, only the referenced array changes. Arithmetic is
-            # unchanged: the same l2_squared zip_with/aggregate fold
-            # runs per centroid element, so distances, the
-            # first-position-of-min tie-break, and every trained
-            # centroid are bit-identical (profiled + asserted in
-            # scripts/profile_lloyd_r13.py; pinned by the trained-gate
-            # oracles and tests/test_ann.py replay tests).
-            cc = F.lit([[float(x) for x in c] for c in cents])
-            dists = F.transform(cc, lambda c: l2_squared(F.col(vec_col), c))
-            return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
         cents = seeds
         # Round cost model (rewritten round 9 after profiling at
@@ -324,7 +304,9 @@ class IVFIndex:
         aggs.append(F.count(F.lit(1)).alias("n"))
         for _ in range(rounds):
             rows = (
-                train_df.groupBy(_assign(cents).alias("_cluster"))
+                train_df.groupBy(
+                    nearest_centroid(vec_col, cents).alias("_cluster")
+                )
                 .agg(*aggs)
                 .collect()
             )
@@ -341,7 +323,7 @@ class IVFIndex:
                 ]
             cents = [means.get(c, cents[c]) for c in range(k)]
         self.centroids = [[float(x) for x in c] for c in cents]
-        out = df.withColumn("_cluster", _assign(cents))
+        out = df.withColumn("_cluster", nearest_centroid(vec_col, cents))
         self._compute_build_stats(out, vec_col)
         return out
 

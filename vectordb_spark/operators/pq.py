@@ -38,6 +38,18 @@ from __future__ import annotations
 
 import random
 from collections.abc import Sequence
+from functools import reduce
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
+from vectordb_spark.functions.distance import (
+    bigint_literal,
+    l2_squared,
+    l2_squared_int,
+    nearest_centroid_position,
+    vector_literal,
+)
 
 # Fixed quantization grid: |x| ≤ ~0.6 for unit-ish embeddings → |q| ≤
 # ~127. 200.0 is exactly representable in binary, so x*QMUL is one
@@ -46,6 +58,14 @@ QMUL = 200.0
 
 M_SUBSPACES = 8
 K_CENTROIDS = 16
+
+# PQIndex.codes encodes vectors this wide with the Arrow-batched numpy
+# kernel: Spark's higher-order functions run interpreted, so at wide
+# dims the m·k·sub per-row lambda work dominates (measured at
+# 2000×960-d warm: literal-Column encode 5.2 s vs Arrow-numpy 1.9 s),
+# while at 64-d the Column encode wins (small per-row work, no Arrow
+# hop).
+ARROW_ENCODE_MIN_DIM = 256
 
 
 def quantize_query(vec: Sequence[float]) -> list[int]:
@@ -101,13 +121,6 @@ def grid_exprs(vec_col: str) -> tuple[str, str]:
     )
 
 
-def _spark_int_l2(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        f"CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-
-
 def _duck_int_l2(a: str, b: str) -> str:
     return (
         f"list_reduce(list_transform(list_zip({a}, {b}), "
@@ -115,105 +128,54 @@ def _duck_int_l2(a: str, b: str) -> str:
     )
 
 
-def adc_exprs(
+def _sub_code(q_col: str, mi: int, centroids: list[list[int]]) -> Column:
+    """1-based PQ code of subspace ``mi`` of a grid vector column: the
+    exact integer-L2 nearest codeword, first occurrence on ties."""
+    sub = len(centroids[0])
+    return nearest_centroid_position(
+        F.slice(q_col, mi * sub + 1, sub), bigint_literal(centroids),
+        dist=l2_squared_int,
+    )
+
+
+def adc_expr(
     q_col: str, codebook: list[list[list[int]]], table: list[list[int]]
-) -> tuple[str, str]:
-    """(spark, duck) expression for the integer ADC approximate distance
-    of a grid-quantized vector column ``q_col``.
-
-    Per subspace m: code = first-occurrence argmin over the k centroid
-    int-L2 distances (``array_position`` of ``array_min`` — identical
-    1-based first-match semantics as DuckDB ``list_position``), then the
-    contribution is the code's entry in the query's precomputed ADC
-    row. The sum over subspaces is the approximate distance; everything
-    is 64-bit integer arithmetic."""
-    m = len(codebook)
-    sub = len(codebook[0][0])
-    spark_terms, duck_terms = [], []
-    for mi in range(m):
-        s_sub = f"slice({q_col}, {mi * sub + 1}, {sub})"
-        d_sub = f"{q_col}[{mi * sub + 1}:{mi * sub + sub}]"
-        s_cb = "array(" + ", ".join(_spark_arr(c) for c in codebook[mi]) + ")"
-        d_cb = "[" + ", ".join(_duck_arr(c) for c in codebook[mi]) + "]"
-        s_dists = f"transform({s_cb}, c -> {_spark_int_l2('c', s_sub)})"
-        d_dists = f"list_transform({d_cb}, c -> {_duck_int_l2('c', d_sub)})"
-        s_code = f"array_position({s_dists}, array_min({s_dists}))"
-        d_code = f"list_position({d_dists}, list_min({d_dists}))"
-        spark_terms.append(f"element_at({_spark_arr(table[mi])}, CAST({s_code} AS INT))")
-        duck_terms.append(f"({_duck_arr(table[mi])})[{d_code}]")
-    return " + ".join(spark_terms), " + ".join(duck_terms)
+) -> Column:
+    """Integer ADC approximate distance of a grid-quantized vector
+    column ``q_col``: per subspace, the query's precomputed ADC entry
+    for the row's code, summed over subspaces in 64-bit integers."""
+    return reduce(
+        lambda a, b: a + b,
+        [
+            F.element_at(
+                bigint_literal(table[mi]), _sub_code(q_col, mi, cb).cast("int")
+            )
+            for mi, cb in enumerate(codebook)
+        ],
+    )
 
 
-def encode_expr(q_col: str, codebook: list[list[list[int]]]) -> str:
-    """Spark expression producing the M-element code array for a
-    grid-quantized vector column — the BUILD-time path: codes are
-    computed once and stored (4 bytes/row), queries never touch the
-    float column until re-rank."""
-    m = len(codebook)
-    sub = len(codebook[0][0])
-    parts = []
-    for mi in range(m):
-        s_sub = f"slice({q_col}, {mi * sub + 1}, {sub})"
-        s_cb = "array(" + ", ".join(_spark_arr(c) for c in codebook[mi]) + ")"
-        s_dists = f"transform({s_cb}, c -> {_spark_int_l2('c', s_sub)})"
-        parts.append(f"array_position({s_dists}, array_min({s_dists}))")
-    return "array(" + ", ".join(parts) + ")"
-
-
-def encode_np_udf(codebook: list[list[list[int]]]):
-    """Arrow-batched encode: the SAME 1-based first-occurrence-argmin
-    codes as :func:`encode_expr` (pinned in tests/test_pq.py), computed
-    by one vectorized numpy broadcast per Arrow batch instead of
-    interpreted per-row HOF lambdas. Exactness is unchanged — grid
-    (floor(x·QMUL + 0.5)) and distances are int64 end-to-end.
-
-    Measured decision (r11, warm, 2000×960-d): literal-Column encode
-    5.2 s vs Arrow-numpy 1.9 s — Spark's higher-order functions run
-    INTERPRETED (no codegen), so at wide dims the m·k·sub per-row
-    lambda work dominates; a broadcast-codebook Column variant was
-    also measured and LOST (17.6 s — generic lambdas without even
-    constant folding). At 64-d the literal path wins (small per-row
-    work, no Arrow hop) — :meth:`PQIndex.codes` auto-picks by dim."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, LongType
-
-    CB = np.asarray(codebook, dtype=np.int64)  # (m, k, sub)
-
-    # Distances via the GEMM expansion |s−c|² = |s|² − 2·s·c + |c|²:
-    # one BLAS matmul per subspace over (batch, sub)×(sub, k) instead
-    # of the naive (batch, m, k, sub) broadcast temp — which at a 10k
-    # Arrow batch of 960-d is a 10 GB int64 allocation (measured: the
-    # broadcast form turned the 100k GIST build into 71 s of memory
-    # thrash; the GEMM form keeps temps at (batch, k)). EXACT despite
-    # float64: grid values are integers ≤ ~2^17, so every product
-    # (≤ 2^34) and every ≤ sub-term partial sum (< 2^41) is an integer
-    # below 2^53 — float64 adds/multiplies of such integers round
-    # nothing, and the int64 round-trip is lossless.
-    CBf = CB.astype(np.float64)
-    c2 = (CB * CB).sum(axis=2)                     # (m, k) int64, exact
-
-    def _encode(v):
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        X = np.stack(v.to_numpy()).astype(np.float64)
-        codes = _encode_batch_np(X, CB, CBf, c2)
-        return pd.Series(list(codes))
-
-    # no pd.Series type hints: this module uses future-annotations
-    # (stringified hints), which pyspark cannot resolve against the
-    # function's locals — pass the eval type explicitly instead
-    _encode.__annotations__ = {"v": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_encode, ArrayType(LongType()))
+def encode_expr(q_col: str, codebook: list[list[list[int]]]) -> Column:
+    """The M-element ``array<bigint>`` code array of a grid-quantized
+    vector column — the BUILD-time path: codes are computed once and
+    stored (4 bytes/row), queries never touch the float column until
+    re-rank."""
+    return F.array(*[_sub_code(q_col, mi, cb) for mi, cb in enumerate(codebook)])
 
 
 def _encode_batch_np(X, CB, CBf, c2):
     """Vectorized GEMM encode of one (n, dim) float64 batch → (n, m)
-    int64 code matrix. Shared by the pandas-UDF and mapInArrow paths;
-    bit-identical to :func:`encode_expr` (same argmin over the same
-    exact-integer distances — see :func:`encode_np_udf`'s exactness
-    note)."""
+    int64 code matrix, bit-identical to :func:`encode_expr` (same
+    argmin over the same exact-integer distances).
+
+    Distances use the expansion |s−c|² = |s|² − 2·s·c + |c|²: one BLAS
+    matmul per subspace over (batch, sub)×(sub, k) instead of the naive
+    (batch, m, k, sub) broadcast temp, which at a 10k Arrow batch of
+    960-d is a 10 GB int64 allocation. EXACT despite float64: grid
+    values are integers ≤ ~2^17, so every product (≤ 2^34) and every
+    ≤ sub-term partial sum (< 2^41) is an integer below 2^53 — float64
+    adds/multiplies of such integers round nothing, and the int64
+    round-trip is lossless."""
     import numpy as np
 
     m, _, sub = CB.shape
@@ -235,13 +197,11 @@ def _encode_batch_np(X, CB, CBf, c2):
 def encode_arrow_map(df, vec_col: str, codebook: list[list[list[int]]],
                      out_col: str = "_pq_codes"):
     """mapInArrow encode: appends ``out_col`` (array<bigint> codes)
-    computing the SAME codes as :func:`encode_np_udf` / `encode_expr`,
-    but moving vectors across the Python boundary as FLAT Arrow
-    buffers instead of the pandas conversion (which materializes one
-    numpy object per row and re-stacks them — measured r12 at
-    100k×960-d warm: 4.1 s pandas-UDF vs 1.6 s mapInArrow for the
-    identical noop-sunk plan, with the synth-only baseline at 1.8 s;
-    guide §4.1/§4.2). All of ``df``'s columns pass through the
+    computing the SAME codes as :func:`encode_expr`, moving vectors
+    across the Python boundary as FLAT Arrow buffers (a pandas UDF
+    materializes one numpy object per row and re-stacks them — measured
+    at 100k×960-d warm: 4.1 s pandas-UDF vs 1.6 s mapInArrow for the
+    identical noop-sunk plan). All of ``df``'s columns pass through the
     boundary, so callers should project to the columns they need
     first — the build-time call sites carry (id, vector) only."""
     import numpy as np
@@ -313,7 +273,7 @@ def adc_from_codes_expr(codes_col: str, table: list[list[int]]) -> str:
 def adc_oracle_expr(
     q_col: str, qq_col: str, codebook: list[list[list[int]]]
 ) -> str:
-    """DuckDB twin of :func:`adc_exprs` with the query's grid vector
+    """DuckDB twin of :func:`adc_expr` with the query's grid vector
     coming from a SQL column (``qq_col``, e.g. a CTE over the vec_id=0
     row) instead of a Python-precomputed table: per subspace, the
     contribution is the query-to-centroid int L2 of the centroid the
@@ -392,7 +352,6 @@ class PQIndex:
         happens only inside full rebuilds, which version a fresh index
         directory)."""
         import numpy as np
-        from pyspark.sql import functions as F
 
         if self.sample_mode == "hash":
             from vectordb_spark.operators.ann import IVFIndex
@@ -483,31 +442,18 @@ class PQIndex:
         self.codebook = cb
         return self
 
-    def codes(
-        self, df, vec_col: str, *, out_col: str = "_pq_codes",
-        impl: str = "auto",
-    ):
-        """Append the stored-code column (build-time batch job).
-        ``impl``: "expr" = literal-Column encode, "np" = Arrow-batched
-        numpy encode (same codes bit-for-bit — see
-        :func:`encode_np_udf`'s measured decision), "auto" = np at
-        wide dims (≥ 256, where interpreted HOF lambdas dominate),
-        expr below."""
-        from pyspark.sql import functions as F
-
+    def codes(self, df, vec_col: str, *, out_col: str = "_pq_codes"):
+        """Append the stored-code column (build-time batch job). Wide
+        vectors (≥ ``ARROW_ENCODE_MIN_DIM``) encode through
+        :func:`encode_arrow_map`, narrower ones through the literal
+        Column :func:`encode_expr`; the codes are the same bit-for-bit."""
         assert self.codebook is not None, "fit() first"
-        if impl == "auto":
-            dim = len(self.codebook) * len(self.codebook[0][0])
-            impl = "np" if dim >= 256 else "expr"
-        if impl == "np":
-            # mapInArrow over the flat vector buffers — same codes as
-            # the pandas-UDF path bit-for-bit, ~2.6× faster at wide
-            # dims (see encode_arrow_map); all current call sites pass
-            # narrow (id, vector[, label]) frames
+        dim = len(self.codebook) * len(self.codebook[0][0])
+        if dim >= ARROW_ENCODE_MIN_DIM:
             return encode_arrow_map(df, vec_col, self.codebook, out_col)
         grid_s, _ = grid_exprs(vec_col)
         return df.withColumn("_pq_grid", F.expr(grid_s)).withColumn(
-            out_col, F.expr(encode_expr("_pq_grid", self.codebook))
+            out_col, encode_expr("_pq_grid", self.codebook)
         ).drop("_pq_grid")
 
     def search_codes(
@@ -517,10 +463,6 @@ class PQIndex:
         ``codes()`` ran at build time. The ranking pass reads only the
         4-byte code column; the float column is touched for ≤ refine
         rows."""
-        from pyspark.sql import functions as F
-
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
-
         assert self.codebook is not None, "fit() first"
         table = adc_table(self.codebook, quantize_query(query_vec))
         approx = (
@@ -555,8 +497,6 @@ class PQIndex:
         finishes — the standard billion-scale ANN layout (coarse +
         fine quantizer). ``ivf`` is a built operators.ann.IVFIndex and
         ``indexed`` its build() output carrying ``_cluster``."""
-        from pyspark.sql import functions as F
-
         clusters = ivf.probe_clusters(query_vec, nprobe)
         probed = indexed.where(F.col("_cluster").isin(clusters))
         if "_pq_codes" in indexed.columns:
@@ -573,18 +513,13 @@ class PQIndex:
     def search(self, df, vec_col: str, query_vec, k: int, *, refine: int = 64, id_col: str = "vec_id"):
         """ADC scan → exact re-rank, same two-pass TakeOrderedAndProject
         shape as SQ8 (queries/ann.py ann_sq8_rerank)."""
-        from pyspark.sql import functions as F
-
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
-
         assert self.codebook is not None, "fit() first"
         q_ints = quantize_query(query_vec)
         table = adc_table(self.codebook, q_ints)
         grid_s, _ = grid_exprs(vec_col)
-        adc_s, _ = adc_exprs("_pq_grid", self.codebook, table)
         approx = (
             df.withColumn("_pq_grid", F.expr(grid_s))
-            .withColumn("_pq_dist", F.expr(adc_s))
+            .withColumn("_pq_dist", adc_expr("_pq_grid", self.codebook, table))
             .orderBy("_pq_dist", id_col)
             .limit(refine)
         )
@@ -614,21 +549,20 @@ def seeded_coarse_centroids(
     return [[rng.randint(-100, 100) for _ in range(dim)] for _ in range(n)]
 
 
-def coarse_cell_exprs(
-    q_col: str, centroids: list[list[int]]
-) -> tuple[str, str]:
-    """(spark, duck) expression assigning a grid-quantized vector
-    column to its nearest coarse centroid (1-based cell id, exact
-    integer L2, first-occurrence argmin — the same tie rule in both
-    engines)."""
-    s_cb = "array(" + ", ".join(_spark_arr(c) for c in centroids) + ")"
-    d_cb = "[" + ", ".join(_duck_arr(c) for c in centroids) + "]"
-    s_dists = f"transform({s_cb}, c -> {_spark_int_l2('c', q_col)})"
-    d_dists = f"list_transform({d_cb}, c -> {_duck_int_l2('c', q_col)})"
-    return (
-        f"array_position({s_dists}, array_min({s_dists}))",
-        f"list_position({d_dists}, list_min({d_dists}))",
+def coarse_cell_expr(q_col: str, centroids: list[list[int]]) -> Column:
+    """1-based ``bigint`` coarse cell of a grid-quantized vector column:
+    the nearest centroid by exact integer L2, first occurrence on ties
+    (the same rule as :func:`coarse_cell_oracle_expr`)."""
+    return nearest_centroid_position(
+        q_col, bigint_literal(centroids), dist=l2_squared_int
     )
+
+
+def coarse_cell_oracle_expr(q_col: str, centroids: list[list[int]]) -> str:
+    """DuckDB twin of :func:`coarse_cell_expr`."""
+    d_cb = "[" + ", ".join(_duck_arr(c) for c in centroids) + "]"
+    d_dists = f"list_transform({d_cb}, c -> {_duck_int_l2('c', q_col)})"
+    return f"list_position({d_dists}, list_min({d_dists}))"
 
 
 def coarse_probe_cells(
@@ -658,8 +592,8 @@ def coarse_probe_cells(
 RESIDUAL_CONVENTION = "double-v2"
 
 
-def residual_expr(vec_col: str, centroids: list[list[float]]) -> str:
-    """Spark expression for the RESIDUAL of a vector against its
+def residual_expr(vec_col: str, centroids: list[list[float]]) -> Column:
+    """The RESIDUAL of a vector against its
     assigned coarse centroid (``_cluster`` column, 0-based): the form
     every production IVFPQ encodes, because raw-vector PQ collapses
     inside a tight cluster — all members share one code and ADC cannot
@@ -675,14 +609,10 @@ def residual_expr(vec_col: str, centroids: list[list[float]]) -> str:
     bit-replayability — the DuckDB twin in queries/ann.py computes the
     same promote-subtract, which is what lets the trained-IVFPQ gate
     hash-match stored codes across engines."""
-    cents = "array(" + ", ".join(
-        "array(" + ", ".join(f"CAST({float(v)!r} AS DOUBLE)" for v in c) + ")"
-        for c in centroids
-    ) + ")"
-    return (
-        f"zip_with({vec_col}, element_at({cents}, CAST(_cluster AS INT) + 1), "
-        "(x, c) -> CAST(x AS DOUBLE) - c)"
+    cent = F.element_at(
+        vector_literal(centroids), F.col("_cluster").cast("int") + 1
     )
+    return F.zip_with(F.col(vec_col), cent, lambda x, c: x.cast("double") - c)
 
 
 class ResidualPQIndex(PQIndex):
@@ -705,12 +635,10 @@ class ResidualPQIndex(PQIndex):
     def fit_residual(
         self, ivf, indexed, vec_col: str, *, id_col: str = "vec_id"
     ) -> "ResidualPQIndex":
-        from pyspark.sql import functions as F
-
         assert ivf.centroids is not None, "IVFIndex.build() first"
         self.coarse_centroids = ivf.centroids
         res = indexed.withColumn(
-            "_res", F.expr(residual_expr(vec_col, ivf.centroids))
+            "_res", residual_expr(vec_col, ivf.centroids)
         )
         super().fit(res, "_res", id_col=id_col)
         return self
@@ -747,8 +675,6 @@ class ResidualPQIndex(PQIndex):
         prime-mod hash subset as ``IVFIndex.build_lloyd`` — serving
         (``codes_residual``/ADC) always covers every row, and the
         filter is SQL-replayable int64 arithmetic."""
-        from pyspark.sql import functions as F
-
         from vectordb_spark.operators.ann import IVFIndex
 
         assert ivf.centroids is not None, "IVFIndex.build() first"
@@ -761,7 +687,7 @@ class ResidualPQIndex(PQIndex):
         grid_s, _ = grid_exprs("_res")
         g = (
             indexed.withColumn(
-                "_res", F.expr(residual_expr(vec_col, ivf.centroids))
+                "_res", residual_expr(vec_col, ivf.centroids)
             )
             .select(id_col, F.expr(grid_s).alias("_g"))
         )
@@ -797,33 +723,10 @@ class ResidualPQIndex(PQIndex):
         aggs.append(F.count(F.lit(1)).alias("n"))
 
         def _assign_code(cb_now):
-            # Codebook as ONE 3-D array literal indexed by _mi (r13):
-            # the previous form spliced all M·K codeword arrays into a
-            # CASE-per-subspace SQL STRING, re-parsed, re-analyzed and
-            # janino-recompiled every round (M·K value-bearing array()
-            # trees, the int-L2 fold inlined twice per branch). A
-            # nested F.lit is a references[] object in generated code,
-            # so the expression shape — and the compiled plan — is
-            # identical across rounds; element_at on the exploded _mi
-            # replaces the CASE. Arithmetic is unchanged: the same
-            # zip_with/aggregate integer L2 per codeword and the same
-            # 1-based first-occurrence argmin, all exact 64-bit ops →
-            # codes and trained codebooks are bit-identical (pinned by
-            # tests/test_pq.py replay tests and the trained-IVF_PQ
-            # gate oracle).
-            cbl = F.lit([[[int(v) for v in code] for code in s] for s in cb_now])
-            cb_mi = F.element_at(cbl, F.col("_mi") + 1)
-            dists = F.transform(
-                cb_mi,
-                lambda c: F.aggregate(
-                    F.zip_with(
-                        c, F.col("_sv"), lambda x, y: (x - y) * (x - y)
-                    ),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, v: acc + v,
-                ),
-            )
-            return F.array_position(dists, F.array_min(dists)).cast("int")
+            # one 3-D codebook literal indexed by _mi keeps the plan
+            # shape identical across rounds
+            cb_mi = F.element_at(bigint_literal(cb_now), F.col("_mi") + 1)
+            return nearest_centroid_position("_sv", cb_mi, dist=l2_squared_int)
 
         for _ in range(rounds):
             # Means run as `sub` wide LONG aggregates over element_at
@@ -860,16 +763,14 @@ class ResidualPQIndex(PQIndex):
         return self
 
     def codes_residual(self, indexed, vec_col: str, *, out_col: str = "_pq_codes"):
-        from pyspark.sql import functions as F
-
         assert self.coarse_centroids is not None, "fit_residual() first"
         res = indexed.withColumn(
-            "_res", F.expr(residual_expr(vec_col, self.coarse_centroids))
+            "_res", residual_expr(vec_col, self.coarse_centroids)
         )
         grid_s, _ = grid_exprs("_res")
         return (
             res.withColumn("_pq_grid", F.expr(grid_s))
-            .withColumn(out_col, F.expr(encode_expr("_pq_grid", self.codebook)))
+            .withColumn(out_col, encode_expr("_pq_grid", self.codebook))
             .drop("_res", "_pq_grid")
         )
 
@@ -886,12 +787,6 @@ class ResidualPQIndex(PQIndex):
         codes_col: str = "_pq_codes",
         id_col: str = "vec_id",
     ):
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
-
         assert self.coarse_centroids is not None, "fit_residual() first"
         probe = ivf.probe_clusters(query_vec, nprobe)
         if not probe:

@@ -262,10 +262,9 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = PQ.seeded_codebook(len(qv))
     table = PQ.adc_table(cb, PQ.quantize_query(qv))
     grid_s, _ = PQ.grid_exprs("embedding")
-    adc_s, _ = PQ.adc_exprs("_pq_grid", cb, table)
     approx = (
         emb.withColumn("_pq_grid", F.expr(grid_s))
-        .withColumn("approx_dist", F.expr(adc_s))
+        .withColumn("approx_dist", PQ.adc_expr("_pq_grid", cb, table))
         .orderBy("approx_dist", "vec_id")
         .limit(_PQ_REFINE)
     )
@@ -506,7 +505,7 @@ def _ivfpq_oracle() -> str:
     cc = PQ.seeded_coarse_centroids(64)
     cb = PQ.seeded_codebook(64)
     _, grid_d = PQ.grid_exprs("embedding")
-    _, cell_d = PQ.coarse_cell_exprs("q", cc)
+    cell_d = PQ.coarse_cell_oracle_expr("q", cc)
     adc_d = PQ.adc_oracle_expr("q", "qq", cb)
     d_cb = "[" + ", ".join(PQ._duck_arr(c) for c in cc) + "]"
     qdists = f"list_transform({d_cb}, c -> {PQ._duck_int_l2('c', 'qq')})"
@@ -568,13 +567,11 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = PQ.coarse_probe_cells(q_ints, cc, _IVFPQ_NPROBE)
     table = PQ.adc_table(cb, q_ints)
     grid_s, _ = PQ.grid_exprs("embedding")
-    cell_s, _ = PQ.coarse_cell_exprs("_pq_grid", cc)
-    adc_s, _ = PQ.adc_exprs("_pq_grid", cb, table)
     approx = (
         emb.withColumn("_pq_grid", F.expr(grid_s))
-        .withColumn("cell", F.expr(cell_s))
+        .withColumn("cell", PQ.coarse_cell_expr("_pq_grid", cc))
         .where(F.col("cell").isin(probes))
-        .withColumn("approx_dist", F.expr(adc_s))
+        .withColumn("approx_dist", PQ.adc_expr("_pq_grid", cb, table))
         .orderBy("approx_dist", "vec_id")
         .limit(_PQ_REFINE)
     )
@@ -745,18 +742,12 @@ def table_ivf_trained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         res = t2.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
         # re-derive the served cluster id from the manifest centroids
         # (search output drops it): postings dir partitions by it
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
+        from vectordb_spark.functions.distance import nearest_centroid
 
-        dists = F.array(
-            *[
-                l2_squared(F.col("embedding"), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
         out = (
             res.withColumn(
                 "cluster",
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
+                nearest_centroid("embedding", info["centroids"]).cast("bigint"),
             )
             .select(
                 "vec_id",
@@ -871,7 +862,7 @@ def table_ivf_sampled_train_search(
     import shutil as _shutil
     import tempfile as _tempfile
 
-    from vectordb_spark.functions.distance import l2_squared, vector_literal
+    from vectordb_spark.functions.distance import nearest_centroid
     from vectordb_spark.queries.vector import _query_vector
     from vectordb_spark.schema import FieldSchema, FieldType, TableSchema
     from vectordb_spark.table import Table
@@ -908,16 +899,10 @@ def table_ivf_sampled_train_search(
         assert info["train_mod"] == _SMP_MOD and info["train_keep"] == _SMP_KEEP
         assert len(info["centroids"]) == _TRN_K
         res = t2.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
-        dists = F.array(
-            *[
-                l2_squared(F.col("embedding"), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
         out = (
             res.withColumn(
                 "cluster",
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
+                nearest_centroid("embedding", info["centroids"]).cast("bigint"),
             )
             .select(
                 "vec_id",
@@ -1150,18 +1135,12 @@ def table_ivfpq_trained_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert info["pq_residual"] and len(info["pq_codebook"]) == _PQT_M
         assert all(len(cb) == _PQT_KC for cb in info["pq_codebook"])
         res = t2.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
+        from vectordb_spark.functions.distance import nearest_centroid
 
-        dists = F.array(
-            *[
-                l2_squared(F.col("embedding"), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
         out = (
             res.withColumn(
                 "cluster",
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
+                nearest_centroid("embedding", info["centroids"]).cast("bigint"),
             )
             .select(
                 "vec_id",
@@ -1230,18 +1209,12 @@ def table_clustered_compact_search(spark: SparkSession, sf_dir: str) -> DataFram
         layout = t2._load_meta()["cluster_layout"]
         assert layout["train"] == "lloyd" and len(layout["centroids"]) == _TRN_K
         res = t2.search_clustered_df(qv, limit=10, nprobe=_TRN_NPROBE)
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
+        from vectordb_spark.functions.distance import nearest_centroid
 
-        dists = F.array(
-            *[
-                l2_squared(F.col("embedding"), vector_literal(c))
-                for c in layout["centroids"]
-            ]
-        )
         out = (
             res.withColumn(
                 "cluster",
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
+                nearest_centroid("embedding", layout["centroids"]).cast("bigint"),
             )
             .select(
                 "vec_id",
@@ -1436,18 +1409,12 @@ def table_ivfpq_sampled_train_search(
         assert info["train_mod"] == _SMP_MOD and info["type"] == "IVF_PQ"
         assert info["pq_residual"] and len(info["pq_codebook"]) == _PQT_M
         res = t2.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
+        from vectordb_spark.functions.distance import nearest_centroid
 
-        dists = F.array(
-            *[
-                l2_squared(F.col("embedding"), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
         out = (
             res.withColumn(
                 "cluster",
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
+                nearest_centroid("embedding", info["centroids"]).cast("bigint"),
             )
             .select(
                 "vec_id",
@@ -1564,11 +1531,11 @@ def ann_gist960_adc_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build-time path: grid → stored codes (what a table column holds).
     # mapInArrow numpy encode — at 960-d the interpreted HOF-lambda
     # Column encode measured 2.7× slower than the Arrow-batched numpy
-    # path (operators/pq.py encode_np_udf's r11 decision), and the
-    # mapInArrow form moves the vectors as flat Arrow buffers instead
-    # of per-row pandas objects (r12: 4.1 → 1.6 s warm at 100k×960-d,
-    # guide §4.1); codes are bit-identical either way, so the oracle
-    # is untouched.
+    # path (operators/pq.py ARROW_ENCODE_MIN_DIM), and the mapInArrow
+    # form moves the vectors as flat Arrow buffers instead of per-row
+    # pandas objects (r12: 4.1 → 1.6 s warm at 100k×960-d, guide
+    # §4.1); codes are bit-identical either way, so the oracle is
+    # untouched.
     coded = PQ.encode_arrow_map(corpus, "embedding", cb, "_codes")
     approx = (
         coded.withColumn(
@@ -1704,18 +1671,12 @@ def table_ivf_refresh_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         info = t2._load_meta()["indexes"]["embedding"]
         assert info.get("deltas"), "refresh did not produce a delta dir"
         res = t2.search_indexed_df(qv, limit=10, nprobe=_TRN_NPROBE)
-        from vectordb_spark.functions.distance import l2_squared, vector_literal
+        from vectordb_spark.functions.distance import nearest_centroid
 
-        dists = F.array(
-            *[
-                l2_squared(F.col("embedding"), vector_literal(c))
-                for c in info["centroids"]
-            ]
-        )
         out = (
             res.withColumn(
                 "cluster",
-                (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint"),
+                nearest_centroid("embedding", info["centroids"]).cast("bigint"),
             )
             .select(
                 "vec_id", "label", "cluster",

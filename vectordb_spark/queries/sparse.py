@@ -153,7 +153,10 @@ def sparse_knn_tf_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⇒ most similar first) against doc 0's TF vector, through the
     engine's sparse distance Column (map-lookup fold over the row's
     indices)."""
-    from vectordb_spark.functions.distance import sparse_dot_product_distance
+    from vectordb_spark.functions.distance import (
+        sparse_dot_product_distance,
+        sparse_vector_literal,
+    )
 
     d = load_table(spark, sf_dir, "documents", rebalance=True)
     tf = d.select("doc_id", F.expr(_TH_S).alias("hs")).select(
@@ -166,10 +169,7 @@ def sparse_knn_tf_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrow = tf.where(F.col("doc_id") == 0).select("vec").head()
     q_idx = [int(i) for i in qrow[0]["indices"]]
     q_val = [float(v) for v in qrow[0]["values"]]
-    qcol = F.struct(
-        F.array(*[F.lit(i) for i in q_idx]).alias("indices"),
-        F.array(*[F.lit(v) for v in q_val]).cast("array<float>").alias("values"),
-    )
+    qcol = sparse_vector_literal(q_idx, q_val)
     out = tf.withColumn(
         "distance", sparse_dot_product_distance(F.col("vec"), qcol)
     )
@@ -217,7 +217,10 @@ def sparse_knn_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically). Completes the reference's three sparse metrics
     as gate queries (dot: sparse_knn_tf_dot; cosine is
     ingest-normalized dot, sparse_l2_normalize)."""
-    from vectordb_spark.functions.distance import sparse_l2_squared
+    from vectordb_spark.functions.distance import (
+        sparse_l2_squared,
+        sparse_vector_literal,
+    )
 
     d = load_table(spark, sf_dir, "documents", rebalance=True)
     tf = d.select("doc_id", F.expr(_TH_S).alias("hs")).select(
@@ -230,10 +233,7 @@ def sparse_knn_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrow = tf.where(F.col("doc_id") == 0).select("vec").head()
     q_idx = [int(i) for i in qrow[0]["indices"]]
     q_val = [float(v) for v in qrow[0]["values"]]
-    qcol = F.struct(
-        F.array(*[F.lit(i) for i in q_idx]).alias("indices"),
-        F.array(*[F.lit(v) for v in q_val]).cast("array<float>").alias("values"),
-    )
+    qcol = sparse_vector_literal(q_idx, q_val)
     out = tf.withColumn("distance", sparse_l2_squared(F.col("vec"), qcol))
     return (
         out.orderBy(F.col("distance").asc(), F.col("doc_id").asc())

@@ -341,11 +341,11 @@ def vec_kmeans_one_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     library call is uncheckable, but ONE Lloyd round from deterministic
     seeds is plain relational algebra — assign each vector to the argmin
     of squared-L2 against the k=4 seed centroids (the embeddings of
-    vec_id 0..3; ties break to the lowest cluster id via the ordered
-    CASE chain, evaluated identically in both engines), then recompute
-    per-cluster per-dimension means on the 1e-12 half-up integer grid
-    (same discipline as vec_centroid_per_label — partition order and
-    engine cannot change a bit).
+    vec_id 0..3; ties break to the lowest cluster id — the oracle's
+    ordered CASE chain and the engine's first-occurrence argmin agree),
+    then recompute per-cluster per-dimension means on the 1e-12 half-up
+    integer grid (same discipline as vec_centroid_per_label — partition
+    order and engine cannot change a bit).
 
     Scale shape: this GATE keeps the tall posexplode plan — at its
     fixture scale (2k embeddings) the wide-aggregate form pays ~4 s of
@@ -360,7 +360,7 @@ def vec_kmeans_one_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials here too — exact sums rebuilt in decimal only on the
     aggregated k·dim rows, same single double rounding, bit-identical
     avgv."""
-    from vectordb_spark.functions.distance import l2_squared, vector_literal
+    from vectordb_spark.functions.distance import nearest_centroid
 
     emb = load_table(spark, sf_dir, "embeddings")
     seeds = [
@@ -370,13 +370,7 @@ def vec_kmeans_one_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("embedding")
         .collect()
     ]
-    d = [l2_squared(F.col("embedding"), vector_literal(s)) for s in seeds]
-    cluster = (
-        F.when((d[0] <= d[1]) & (d[0] <= d[2]) & (d[0] <= d[3]), F.lit(0))
-        .when((d[1] <= d[2]) & (d[1] <= d[3]), F.lit(1))
-        .when(d[2] <= d[3], F.lit(2))
-        .otherwise(F.lit(3))
-    )
+    cluster = nearest_centroid("embedding", seeds)
     asg = emb.select(cluster.alias("cluster"), "embedding")
     px = asg.select(
         "cluster", F.posexplode("embedding").alias("pos", "val")

@@ -41,7 +41,7 @@ try:  # POSIX advisory file locks (Linux/macOS); absent on Windows
 except ImportError:  # pragma: no cover
     fcntl = None  # type: ignore[assignment]
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from vectordb_spark import delta_index as di
@@ -57,8 +57,11 @@ from vectordb_spark.operators.pq import (
 from vectordb_spark.functions.distance import (
     distance_for_metric,
     l2_normalize,
+    nearest_centroid,
     sparse_distance_for_metric,
     sparse_l2_normalize,
+    sparse_vector_literal,
+    vector_literal,
 )
 from vectordb_spark.schema import (
     FieldSchema,
@@ -1296,7 +1299,7 @@ class Table:
                 "layout in the manifest.",
             )
         return df.withColumn(
-            "_cluster", _nearest_centroid(info["field"], info["centroids"])
+            "_cluster", nearest_centroid(info["field"], info["centroids"])
         )
 
     # Segment dirs younger than this survive vacuum even when
@@ -1885,16 +1888,11 @@ class Table:
         df = self.df()
         if f.field_type.is_sparse_vector:
             q = _normalize_sparse_query(query_vector, f)
-            qcol = F.struct(
-                F.array(*[F.lit(int(i)) for i in q["indices"]]).alias("indices"),
-                F.array(*[F.lit(float(x)) for x in q["values"]])
-                .cast("array<float>")
-                .alias("values"),
-            )
+            qcol = sparse_vector_literal(q["indices"], q["values"])
             dist = sparse_distance_for_metric(f.metric, F.col(f.name), qcol)
         else:
             q = _normalize_dense_query(query_vector, f)
-            qcol = F.array(*[F.lit(float(x)) for x in q])
+            qcol = vector_literal(q)
             dist = distance_for_metric(f.metric, F.col(f.name), qcol)
 
         post = ast is not None and references_distance(ast)
@@ -2288,7 +2286,7 @@ class Table:
 
         def encode(info: dict, tail: DataFrame, name: str) -> int:
             assigned = tail.select("_row_id", field).withColumn(
-                "_cluster", _nearest_centroid(field, info["centroids"])
+                "_cluster", nearest_centroid(field, info["centroids"])
             )
             if info.get("type") == "IVF_SQ8":
                 assigned = _sq8_codes(assigned, field)
@@ -2485,7 +2483,7 @@ class Table:
         if tail is not None:
             candidates = candidates.unionByName(tail).dropDuplicates(["_row_id"])
         ast = parse_filter(filter, self.field_map())
-        qcol = F.array(*[F.lit(float(x)) for x in q])
+        qcol = vector_literal(q)
         dist = distance_for_metric(info["metric"], F.col(f.name), qcol)
         out = candidates
         post = ast is not None and references_distance(ast)
@@ -2536,7 +2534,7 @@ class Table:
             F.col("_cluster").isin([int(c) for c in clusters])
         )
         ast = parse_filter(filter, self.field_map())
-        qcol = F.array(*[F.lit(float(x)) for x in q])
+        qcol = vector_literal(q)
         dist = distance_for_metric(idx.metric, F.col(f.name), qcol)
         post = ast is not None and references_distance(ast)
         if ast is not None and not post:
@@ -2974,12 +2972,7 @@ class Table:
         cands = sharing.unionByName(
             void.limit(limit).select("_row_id")
         ).distinct()
-        qcol = F.struct(
-            F.array(*[F.lit(int(i)) for i in q["indices"]]).alias("indices"),
-            F.array(*[F.lit(float(x)) for x in q["values"]])
-            .cast("array<float>")
-            .alias("values"),
-        )
+        qcol = sparse_vector_literal(q["indices"], q["values"])
         scored = base.join(cands, "_row_id", "left_semi").withColumn(
             "_distance",
             sparse_distance_for_metric(f.metric or "EUCLIDEAN", F.col(f.name), qcol),
@@ -3131,17 +3124,6 @@ def _ivf_index(info: dict):
     nn = info.get("mean_nn_centroid_dist")
     idx.mean_nn_centroid_dist = float("inf") if nn is None else float(nn)
     return idx
-
-
-def _nearest_centroid(field: str, centroids: list) -> Column:
-    """0-based index of the nearest centroid as a codegen Column — k
-    inline distance expressions + array argmin, no shuffle, no UDF."""
-    from vectordb_spark.functions.distance import l2_squared, vector_literal
-
-    dists = F.array(
-        *[l2_squared(F.col(field), vector_literal(c)) for c in centroids]
-    )
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
 def _sq8_codes(assigned: DataFrame, field: str) -> DataFrame:
